@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 # Ordered (pattern, replacement) chain. Order is semantic: dotted
 # quads go first so an IP inside a larger token is already collapsed
@@ -313,6 +314,10 @@ def lm_perplexity(
 # lifecycle note inside the function) — at most one element.
 _DSIR_CACHE: list = []
 
+# Histogram width of dsir_weights' cutoff select: buckets per pass,
+# and the most rows a pass (or the final key fetch) sends to the driver.
+_SELECT_B = 1024
+
 
 def dsir_weights(
     docs: DataFrame,
@@ -351,44 +356,45 @@ def dsir_weights(
     aggregates — the dim pass shuffles ≤ ``buckets`` rows per map task,
     the scoring pass shuffles one row per document after a broadcast
     join against the ≤ ``buckets``-row log-ratio dim. No per-row
-    Python. The keep bit needs the key at integer rank
-    ``floor(q·n)`` — ranking every row for a single cutoff is wasted
-    motion, so the cutoff key is found by EXACT distributed selection
-    instead (no corpus-wide range shuffle, no global-ORDER-BY window,
-    which would ship every row to ONE reducer):
+    Python. The keep bit needs only the key at integer rank
+    ``r = floor(q·n)``, so that key is found by EXACT iterated-histogram
+    selection instead of ranking every row (no range shuffle, no
+    global-ORDER-BY window, which would ship every row to ONE reducer):
 
     1. persist the skinny per-doc projection (3 columns, ~24 B/doc —
        the gram pipeline runs exactly once; MEMORY_AND_DISK so
        executors under pressure spill instead of recomputing);
-    2. one agg gives ``n``; one gives a Greenwald–Khanna bracket
-       ``[P_lo, P_hi]`` from ``percentile_approx`` at
-       ``q ± max(3/acc, 8/n)`` — GK's deterministic rank-error bound
-       (≤ n/acc) plus the ±1-rank definitional slack means the true
-       rank-k key ALWAYS lies inside the bracket (a count-based guard
-       falls back to selecting over the full set anyway, so
-       correctness never rests on the bound — only speed does);
-    3. one agg counts rows below/inside the bracket; the rows inside
-       (≤ ~6n/acc + cutoff-value ties, ~250k rows for a 25 G-doc
-       corpus at acc=1e5) are the only rows that ever shuffle —
-       ``_nth_key`` range-partitions JUST the bracket and fetches the
-       exact rank-``(k − n_below)`` key;
-    4. ``keep`` is then a broadcast integer comparison against the
-       cutoff key — zero additional exchanges on the corpus.
+    2. one aggregate gives ``n`` and the min/max of both key columns;
+    3. while the key range known to hold rank ``r`` has more than
+       S = ``_SELECT_B`` (1024) rows and spans more than one
+       ``logw_micro`` value, one ``groupBy`` counts its rows in S
+       equal-width integer buckets (map-side combined: each task
+       shuffles ≤ S rows); the ≤ S counts come to the driver, whose
+       cumulative walk finds the bucket holding rank ``r`` and narrows
+       the range to it. A single ``logw_micro`` value holding more
+       than S rows (a giant tie) is narrowed the same way on
+       ``doc_id``;
+    4. the ≤ S keys left are collected, sorted on the driver, and
+       the ``r``-th is the cutoff; ``keep`` is a broadcast integer
+       comparison against it — no further exchange on the corpus.
 
-    Worst case (every doc sharing one logw value, so the bracket IS
-    the corpus) degrades to exactly the old distributed-rank plan —
-    a range shuffle of the skinny projection — never to a single
-    reducer. Driver-side control flow collects O(1) scalar rows plus
-    ≤ ``spark.sql.shuffle.partitions`` partition sizes, documented
-    bounded.
+    Each pass shrinks the range's width by a factor of S, so a key
+    column takes at most ⌈log_S(range)⌉ + 1 passes (≤ 8 for the whole
+    64-bit range), and every pass sends ≤ S rows to the driver.
+    Bucket indexes are exact integer division over ``decimal(20,0)``:
+    a double division rounds keys near bucket edges into the wrong
+    bucket once keys span ±2^62.
 
-    Rounding contract (hardened after a driver-env hash flip at the
-    1e-6 grid, VERDICT r4 item 1): per-bucket log_ratio rounds to
-    4 decimals — a 1-ulp libm difference in ln (~1e-16 absolute) sits
-    ~1e12 away from the nearest 5e-5 half-way boundary, so the decimal
-    agrees across engines — then scales to exact micro-longs
-    (4-decimal value * 1e4 is an exact integer; * 100 keeps micro
-    units). The keep cutoff is an integer rank, never a float.
+    Rounding contract: per-bucket log_ratio rounds to 4 decimals, then
+    scales to exact micro-longs (a 4-decimal value * 1e4 is an exact
+    integer; * 100 keeps micro units), so the published weight is an
+    integer sum and the keep cutoff an integer rank, never a float.
+    (The historical cross-engine mismatch on this output was never a
+    rounding event — the nearest 1e-4 boundary at sf0.01 sits 7e-8
+    away, nine orders above a 1-ulp libm delta. It was a type leak in
+    the DuckDB oracle: ``sum(BIGINT)`` widens to HUGEINT, which pandas
+    reads as float64, so 539600 compared against 539600.0. The oracle
+    now casts the sum back to BIGINT.)
     """
     from loganalyzer_spark.operators.dedup import _hash60
 
@@ -447,15 +453,9 @@ def dsir_weights(
         )
     )
     # keep = integer rank over the UNIQUE key (logw_micro, doc_id)
-    # > floor(q·n)  ⟺  (logw_micro, doc_id) > cutoff key at rank
-    # floor(q·n). Selecting that one key exactly (docstring steps 1-4)
-    # costs three tiny aggs over the persisted skinny projection plus
-    # a shuffle of only the GK bracket — the corpus itself never
-    # range-shuffles, and the keep bit becomes a broadcast integer
-    # comparison.
-    import math
-
-    from pyspark.storagelevel import StorageLevel
+    # > floor(q·n)  ⟺  (logw_micro, doc_id) > the key at rank
+    # floor(q·n). The histogram select in the docstring finds that one
+    # key; keep is then a broadcast integer comparison.
 
     # Cache lifecycle: the persisted skinny projection is read by the
     # selection jobs below AND by the returned plan's final action, so
@@ -464,114 +464,43 @@ def dsir_weights(
     # each call releases the previous call's cache (recompute-safe —
     # unpersist never breaks a still-held result, it only uncaches its
     # input), and a caller that is fully done can
-    # ``spark.catalog.clearCache()``.
+    # ``spark.catalog.clearCache()``. An entry from another session
+    # (e.g. one already stopped) is dropped without calling into it.
     while _DSIR_CACHE:
-        _DSIR_CACHE.pop().unpersist(blocking=False)
+        old = _DSIR_CACHE.pop()
+        if old.sparkSession is docs.sparkSession:
+            old.unpersist(blocking=False)
     scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
     _DSIR_CACHE.append(scored)
 
-    acc = 100_000
-    # pad ≥ 1/acc + 1/n makes the bracket provably contain the rank-k
-    # key under GK's deterministic error bound (see docstring); the
-    # count guard below keeps exactness even if it somehow didn't.
-    # n and the bracket come from ONE job (pad=3/acc is already valid
-    # for n ≥ 50k); only tiny inputs — where everything is cheap —
-    # pay a second percentile pass with the n-aware pad.
-    def _bracket(pad: float):
-        lo_q = max(0.0, keep_quantile - pad)
-        hi_q = min(1.0, keep_quantile + pad)
-        return F.percentile_approx("logw_micro", [lo_q, hi_q], acc).alias("p")
-
-    first = scored.agg(F.count(F.lit(1)).alias("n"), _bracket(3.0 / acc)).collect()[0]
-    n = int(first["n"])
-    k = int(math.floor(keep_quantile * n))
-    if k <= 0:
+    bounds = [f(c) for c in ("logw_micro", "doc_id") for f in (F.min, F.max)]
+    n, *ends = scored.agg(F.count(F.lit(1)), *bounds).first()
+    r = int(keep_quantile * n)  # 1-based rank of the cutoff key
+    if r <= 0:
         return scored.withColumn("keep", F.lit(True))
-    p = first["p"]
-    if n < 50_000:  # 3/acc < 1/acc + 1/n: re-bracket with the wide pad
-        pad = max(3.0 / acc, 8.0 / n)
-        p = scored.agg(_bracket(pad)).collect()[0]["p"]
-    p_lo, p_hi = int(p[0]), int(p[1])
-    cnt = scored.agg(
-        F.sum(F.when(F.col("logw_micro") < p_lo, 1).otherwise(0)).alias("lt"),
-        F.sum(
-            F.when(F.col("logw_micro").between(p_lo, p_hi), 1).otherwise(0)
-        ).alias("br"),
-    ).collect()[0]
-    n_lt, n_br = int(cnt["lt"] or 0), int(cnt["br"] or 0)
-    if n_lt < k <= n_lt + n_br:
-        bracket = scored.filter(F.col("logw_micro").between(p_lo, p_hi))
-    else:  # unreachable under GK bounds; exactness must not rest on them
-        n_lt, bracket = 0, scored
-    n_range = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cut_w, cut_d = _nth_key(bracket, k - n_lt, n_range)
-    return scored.select(
-        "doc_id",
-        "n_grams",
-        "logw_micro",
-        (
-            (F.col("logw_micro") > F.lit(cut_w))
-            | (
-                (F.col("logw_micro") == F.lit(cut_w))
-                & (F.col("doc_id") > F.lit(cut_d))
-            )
-        ).alias("keep"),
-    )
+    # rng: the inclusive key range still known to hold rank r, per column
+    rng = {"logw_micro": ends[:2], "doc_id": ends[2:]}
 
+    def inside():
+        conds = [F.col(c).between(lo, hi) for c, (lo, hi) in rng.items()]
+        return scored.filter(conds[0] & conds[1])
 
-def _nth_key(df, r: int, n_range: int):
-    """Exact r-th smallest ``(logw_micro, doc_id)`` of ``df``, 1-based.
-
-    Distributed selection: range partitions hold ascending disjoint key
-    ranges in ascending partition id, each sorted locally, so
-    global rank = (rows in earlier partitions) + local index + 1. The
-    local index comes from ``monotonically_increasing_id``'s layout
-    contract (pid in the upper bits, within-partition row number in the
-    low 33); _pid and _loc are read from the SAME id value so they
-    cannot disagree. The projection is persisted so the sizes job and
-    the fetch job see the SAME materialized (pid, loc) assignment
-    (range-boundary sampling is not seed-stable across jobs); where
-    the boundaries fall never affects the answer — keys are unique,
-    rank is rank. Driver traffic: ≤ ``n_range`` partition sizes + the
-    one cutoff row.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    mid = F.monotonically_increasing_id()
-    local = (
-        df.repartitionByRange(n_range, "logw_micro", "doc_id")
-        .sortWithinPartitions("logw_micro", "doc_id")
-        .select("logw_micro", "doc_id", mid.alias("_mid"))
-        .select(
-            "logw_micro",
-            "doc_id",
-            F.shiftright("_mid", 33).alias("_pid"),
-            F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)).alias("_loc"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        sizes = sorted(
-            (
-                (row["_pid"], row["_cnt"])
-                for row in local.groupBy("_pid")
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .collect()
-            )
-        )
-        off = 0
-        pid = loc = None
-        for p, c in sizes:
-            if r <= off + c:
-                pid, loc = p, r - off - 1
-                break
-            off += c
-        row = local.filter(
-            (F.col("_pid") == pid) & (F.col("_loc") == loc)
-        ).collect()[0]
-        return row["logw_micro"], row["doc_id"]
-    finally:
-        local.unpersist()
+    cnt = n  # rows inside rng
+    for c, (lo, hi) in rng.items():
+        while cnt > _SELECT_B and lo < hi:
+            # decimal keeps (key - lo) exact across the whole long range
+            width = (hi - lo) // _SELECT_B + 1
+            idx = F.expr(f"(cast({c} AS decimal(20,0)) - ({lo})) div {width}")
+            for i, cnt in sorted(inside().groupBy(idx.alias("i")).count().collect()):
+                if r <= cnt:
+                    break
+                r -= cnt
+            lo, hi = lo + i * width, min(hi, lo + (i + 1) * width - 1)
+            rng[c] = [lo, hi]
+    cut_w, cut_d = sorted(inside().select("logw_micro", "doc_id").collect())[r - 1]
+    w, d = F.col("logw_micro"), F.col("doc_id")
+    keep = (w > cut_w) | ((w == cut_w) & (d > cut_d))
+    return scored.select("doc_id", "n_grams", "logw_micro", keep.alias("keep"))
 
 
 def c4_clean(

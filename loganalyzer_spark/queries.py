@@ -3051,7 +3051,7 @@ _q AS (
     ) AS w(idx, a, b) ON w.idx = i.idx
   GROUP BY 1
 )
-SELECT doc_id, round(s + ({c0!r}), 6) AS log_odds,
+SELECT doc_id, cast(round(s + ({c0!r}), 6) AS DOUBLE) AS log_odds,
        CASE WHEN s + ({c0!r}) > 0 THEN 1 ELSE 0 END AS pred
 FROM _q
 """
@@ -3089,7 +3089,7 @@ _dot AS (
     ) AS w(idx, wt) ON w.idx = i.idx
   GROUP BY 1
 )
-SELECT doc_id, round(dot + ({b!r}), 6) AS margin,
+SELECT doc_id, cast(round(dot + ({b!r}), 6) AS DOUBLE) AS margin,
        CASE WHEN dot + ({b!r}) > 0 THEN 1 ELSE 0 END AS pred
 FROM _dot
 """
@@ -3420,7 +3420,8 @@ def bucketed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM dim CROSS JOIN tot),
     scored AS (
       SELECT g.doc_id, count(*) AS n_grams,
-             sum(cast(round(r.log_ratio * 10000) AS BIGINT)) * 100 AS logw_micro
+             cast(sum(cast(round(r.log_ratio * 10000) AS BIGINT)) AS BIGINT) * 100
+               AS logw_micro
       FROM grams g JOIN ratio r USING (bucket) GROUP BY g.doc_id),
     ranked AS (
       SELECT *, row_number() OVER (ORDER BY logw_micro, doc_id) AS rk,
@@ -3437,11 +3438,14 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the way lm_perplexity uses its doc_id-mod slice), add-one smoothing
     over 1024 buckets, keep = top quartile by an INTEGER rank over
     (logw_micro, doc_id) — rank > floor(0.75·n), no float percentile
-    interpolation anywhere (hardened after the r4 driver hash flip).
-    Weights publish as exact integer micro-units (logw_micro) — see
-    operators/web.py::dsir_weights for the scale contract (two
-    map-side-combined passes, broadcast log-ratio dim, one |docs|-row
-    exchange) and the rounding contract.
+    interpolation anywhere. Weights publish as exact integer
+    micro-units (logw_micro) — see operators/web.py::dsir_weights for
+    the scale contract (two map-side-combined passes, broadcast
+    log-ratio dim, one |docs|-row exchange) and the rounding contract.
+    The oracle casts its logw_micro sum back to BIGINT: DuckDB widens
+    sum(BIGINT) to HUGEINT, which pandas reads as float64, so an
+    un-cast oracle renders 539600.0 against Spark's 539600 — the cause
+    of the earlier hash mismatch on this query, not rounding.
     Output: (doc_id, n_grams, logw_micro, keep)."""
     docs = spark.read.parquet(_t(sf_dir, "documents")).select(
         "doc_id", "text", (F.col("lang") == "en").alias("is_target")

@@ -16,6 +16,17 @@ from pyspark.sql import SparkSession
 SEED = 42
 
 
+def _default_heap() -> str:
+    """Driver heap: half of MemAvailable, so the JVM can start on a
+    host whose other tenants already hold part of the memory."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return "2g"
+    return f"{kb // 2048}m"
+
+
 def get_spark(
     app: str = "loganalyzer_spark",
     cores: int | None = None,
@@ -48,25 +59,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # 16g is the measured sweet spot on this 32-core VM: 8g doubles
-        # GC time at 32 threads, 48g collapses throughput ~4x
-        # (ParallelGC scans of a huge cold heap); see BENCH/BASELINE.md.
-        .config("spark.driver.memory", (_mem := os.environ.get("SPARK_DRIVER_MEM", "16g")))
-        # Pre-touch the whole heap at JVM launch: this VM's virtio
-        # free-page-reporting discards freed guest pages, so LAZY heap
-        # growth faults fresh pages mid-run at host-paging speed —
-        # observed 5x wall inflation on unchanged plans (BENCH_r03) and
-        # 27k → 49k docs/s on the executor ladder when fixed
-        # (BENCH/EXECUTORS.md). -Xms=-Xmx + AlwaysPreTouch moves the
-        # fault cost to startup, outside every timed window. Only the
-        # FIRST getOrCreate in a process launches the JVM, so the
-        # startup cost is paid once.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTS", f"-Xms{_mem} -XX:+AlwaysPreTouch"
-            ),
-        )
+        .config("spark.driver.memory", os.getenv("SPARK_DRIVER_MEM") or _default_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # measured on this VM (BENCH/BASELINE.md): small parquet files
@@ -75,6 +68,11 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(512 * 1024))
     )
+    # No -Xms/AlwaysPreTouch by default: committing the whole heap at
+    # launch fails outright when it exceeds free memory. Benches that
+    # want a fixed, pre-faulted heap set SPARK_DRIVER_JAVA_OPTS.
+    if java_opts := os.environ.get("SPARK_DRIVER_JAVA_OPTS"):
+        b = b.config("spark.driver.extraJavaOptions", java_opts)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -1076,12 +1076,15 @@ def _assert_dsir_keep_is_exact_rank(out_rows, keep_quantile):
         assert r["keep"] == (rk > k), (r["doc_id"], rk, k)
 
 
-def test_dsir_keep_cutoff_selection_adversarial(spark):
+def test_dsir_keep_cutoff_selection_adversarial(spark, monkeypatch):
     """The distributed cutoff selection must equal the brute integer
     rank rule on the distributions that stress it: a giant tie
-    straddling the cutoff (the GK bracket collapses to one value and
-    the tie-break by doc_id decides every keep bit), all-unique keys,
-    and n small enough that floor(q*n) = 0 (keep-all)."""
+    straddling the cutoff (the tie-break by doc_id decides every keep
+    bit), all-unique keys, n small enough that floor(q*n) = 0
+    (keep-all), and — with the histogram width shrunk to 4 so the
+    select narrows over several passes — a tie wider than the
+    histogram whose doc_ids span ±2^62, all-negative weights, and the
+    extreme ranks r = 1 and r = n."""
     from loganalyzer_spark.operators import web as W
 
     # 40 identical docs (one logw value, ranks 1..40 decided purely by
@@ -1119,6 +1122,46 @@ def test_dsir_keep_cutoff_selection_adversarial(spark):
     )
     out_none = W.dsir_weights(few, buckets=8, keep_quantile=1.0).collect()
     assert [r["keep"] for r in out_none] == [False] * 5
+
+    # Histogram width 4: the cutoff search now takes several narrowing
+    # passes on logw_micro and then on doc_id (counted from the bucket
+    # expressions the select builds).
+    monkeypatch.setattr(W, "_SELECT_B", 4)
+    exprs: list[str] = []
+    expr = F.expr
+    monkeypatch.setattr(F, "expr", lambda s: exprs.append(s) or expr(s))
+    schema = "doc_id long, text string, is_target boolean"
+
+    # A 14-doc tie (> 4) at the lowest logw, its doc_ids spanning ±2^62
+    # (adjacent keys at both ends), plus 6 distinct docs. q=0.5 puts
+    # rank 10 inside the tie, so the tie straddles the cutoff.
+    e = 2**62
+    ids = [-e, -e + 1, e - 1, e] + [j * 2**57 for j in range(10)]
+    rows = [(d, "the cat sat on the mat", d % 5 == 0) for d in ids]
+    rows += [(100 + j, f"uniq{j} tok{j} w{j} cat", False) for j in range(6)]
+    docs = spark.createDataFrame(rows, schema)
+    out = W.dsir_weights(docs, buckets=32, keep_quantile=0.5).collect()
+    tied = [r for r in out if r["doc_id"] in ids]
+    assert len({r["logw_micro"] for r in tied}) == 1
+    assert {r["keep"] for r in tied} == {True, False}  # straddles the cutoff
+    _assert_dsir_keep_is_exact_rank(out, 0.5)
+    assert sum("cast(logw_micro" in s for s in exprs) >= 1
+    assert sum("cast(doc_id" in s for s in exprs) >= 2
+
+    # All-negative weights (no target rows, few hash buckets used), 20
+    # distinct keys: r = 1, a middle rank, and r = n.
+    vocab = ["a", "b", "c"]
+    texts = [" ".join(vocab[i * j % 3] for j in range(i % 7 + 2)) for i in range(20)]
+    neg = spark.createDataFrame([(i, t, False) for i, t in enumerate(texts)], schema)
+    passes = []
+    for q in (0.05, 0.75, 1.0):
+        exprs.clear()
+        out = W.dsir_weights(neg, buckets=1024, keep_quantile=q).collect()
+        assert all(r["logw_micro"] < 0 for r in out)
+        assert len({r["logw_micro"] for r in out}) == 20
+        _assert_dsir_keep_is_exact_rank(out, q)
+        passes.append(sum("cast(logw_micro" in s for s in exprs))
+    assert min(passes) >= 1 and max(passes) >= 2
 
 
 def test_incremental_partial_fit_convergence():
@@ -1804,6 +1847,27 @@ def test_dsir_cache_bounded_to_one_entry(spark):
     for _ in range(3):
         assert dsir_weights(docs, buckets=32).count() == 60
     assert jsc.getPersistentRDDs().size() <= before + 1
+
+
+def test_dsir_cache_drops_entry_from_another_session(spark):
+    """A cached projection left over from a stopped session must be
+    dropped without calling into it: unpersisting through a dead
+    context raises."""
+    from loganalyzer_spark.operators import web as W
+
+    class Stale:
+        sparkSession = object()
+
+        def unpersist(self, blocking=False):
+            raise RuntimeError("unpersist through a stopped session")
+
+    W._DSIR_CACHE[:] = [Stale()]
+    docs = spark.createDataFrame(
+        [(i, i % 2 == 0, f"tok{i % 3} tok{i}") for i in range(8)],
+        "doc_id long, is_target boolean, text string",
+    )
+    assert W.dsir_weights(docs, buckets=8).count() == 8
+    assert len(W._DSIR_CACHE) == 1 and not isinstance(W._DSIR_CACHE[0], Stale)
 
 
 def test_passthrough_operators_preserve_caller_temp_columns(spark):

@@ -2,13 +2,17 @@
 
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB (same parquet tables), then compares
-row count, column names, and order-insensitive values.
+row count, column names, numeric kind (integer vs float) and
+order-insensitive values. An oracle whose result has a column type
+Spark cannot represent fails before the compare.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 import time
 
@@ -20,6 +24,31 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+_DECIMAL_PRECISION = re.compile(r"DECIMAL\((\d+)")
+
+
+def unrepresentable(rel) -> list[str]:
+    """Result columns whose DuckDB type has no Spark twin: 128-bit
+    integers (HUGEINT, UHUGEINT) and decimals wider than 18 digits.
+    pandas renders them as float64, so an integer-valued column would
+    compare as float and hide a type mismatch."""
+    bad = []
+    for col, typ in zip(rel.columns, rel.types):
+        t = str(typ)
+        wide = any(int(p) > 18 for p in _DECIMAL_PRECISION.findall(t))
+        if "HUGEINT" in t or wide:
+            bad.append(f"{col} {t}")
+    return bad
+
+
+def numeric_kind(s: pd.Series) -> str | None:
+    if pd.api.types.is_integer_dtype(s):
+        return "int"
+    if pd.api.types.is_float_dtype(s):
+        return "float"
+    return None
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -50,6 +79,13 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> bool:
         return False
     if not ok:
         return False
+    for c in sorted(sdf.columns):
+        if {numeric_kind(sdf[c]), numeric_kind(ddf[c])} == {"int", "float"}:
+            kinds = f"spark={sdf[c].dtype} duckdb={ddf[c].dtype}"
+            print(f"  [{name}] TYPE differs in column {c}: {kinds}")
+            ok = False
+    if not ok:
+        return False
     a, b = normalize(sdf), normalize(ddf)
     for c in a.columns:
         ca, cb = a[c], b[c]
@@ -76,7 +112,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from loganalyzer_spark.session import get_spark
 
@@ -105,9 +141,15 @@ def main() -> int:
             n_weak += 1
             continue
         try:
-            ddf = con.execute(oracles[name]).df()
+            rel = con.sql(oracles[name])
+            bad = unrepresentable(rel)
+            ddf = rel.df()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {e}")
+            n_fail += 1
+            continue
+        if bad:
+            print(f"FAIL {name}: oracle types Spark cannot represent: {bad}")
             n_fail += 1
             continue
         if compare(name, sdf, ddf):
