@@ -3,8 +3,9 @@
 Times (a) each headline query from the registry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and (b) the end-to-end
 parse→match→enrich→route→aggregate pipeline over a deterministically
-generated corpus (SPARK_GRAFT_BENCH_DOCS docs, default 200k ≈ 1.8M
-lines), reporting docs/sec.
+generated corpus (SPARK_GRAFT_BENCH_DOCS docs, default 500k ≈ 4.5M
+lines), reporting docs/sec. Every timing goes through
+loganalyzer_spark/measure.py.
 
 Runs on local[$SPARK_GRAFT_CPUS] (default all cores).
 """
@@ -14,7 +15,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -34,140 +34,25 @@ HEADLINE = [
 ]
 
 
-def _run_count(df) -> int:
-    # count() executes the plan but lets Catalyst PRUNE columns the
-    # count doesn't need — fine for the headline set (their expensive
-    # columns feed joins/aggregates the count still requires, and the
-    # round-over-round driver number must stay comparable), wrong for
-    # timing scan-shaped operators: see _run_materialize.
-    return df.count()
-
-
-def _run_materialize(df) -> int:
-    """Full-materialization action for operator timing. Under count()
-    Catalyst prunes every column the action doesn't need — for
-    sequence_packing the counted plan collapsed to Filter+Range (the
-    window, shard hash, and the only exchange all eliminated), and for
-    c4_clean it collapsed to a bare groupBy count (ADVICE r4). Hashing
-    every output column forces the full computation; returns the row
-    count."""
-    from pyspark.sql import functions as F
-
-    # bit_xor, not sum: summing 64-bit hashes overflows under ANSI mode.
-    row = (
-        df.select(F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h"))
-        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(_h)").alias("h"))
-        .collect()[0]
-    )
-    return int(row["n"])
-
-
-def _host_mem_probe_mb_s() -> float:
-    """First-touch page-fault throughput of NEVER-touched guest pages.
-
-    This VM runs virtio free-page-reporting: freed guest pages are
-    discarded by the host, and re-faulting them goes through the
-    hypervisor at a rate that swings from >1 GB/s to <10 MB/s depending
-    on host load. JVM heap growth and Arrow buffers sit on that path,
-    so a degraded probe reading means wall-clock numbers measure the
-    host, not this code. Recorded in the output JSON so a slow round
-    is attributable.
-    """
-    import numpy as np
-
-    t0 = time.time()
-    a = np.zeros(200_000_000 // 8)  # 200 MB fresh mmap
-    a[:: 4096 // 8] = 1.0  # touch every page
-    dt = time.time() - t0
-    del a
-    return round(200.0 / dt, 1)
-
-
-def _warm_host(target_mb_s: float = 500.0, budget_s: float = 90.0) -> tuple[float, float]:
-    """Wait out a degraded first-touch phase before timing anything.
-
-    The 16g pre-touched driver heap faults ~16 GB at JVM startup; on
-    this free-page-reporting VM that reliably leaves the host's paging
-    path degraded for the next minute or two (observed start probes of
-    95-218 MB/s in three consecutive runs, healing to >2 GB/s by run
-    end — so early-timed queries eat the degraded phase while late ones
-    run clean). Each probe itself touches 200 MB of fresh pages, which
-    is what drives the recovery; loop until the probe reads healthy or
-    the budget runs out. This automates the CLAUDE.md protocol ("if
-    below ~500 MB/s the numbers measure the host — wait and re-run")
-    instead of publishing a degraded round. Returns
-    (final_probe_mb_s, seconds_waited)."""
-    t0 = time.time()
-    p = _host_mem_probe_mb_s()
-    while p < target_mb_s and time.time() - t0 < budget_s:
-        time.sleep(2.0)
-        p = _host_mem_probe_mb_s()
-    return p, round(time.time() - t0, 1)
-
-
-def _gated_runs(
-    fn, reps: int = 3, action=_run_count
-) -> tuple[float, int, list[float], list[float], bool]:
-    """Probe-gated fresh-plan timing (the BENCH_r03 fix: endpoint probes
-    don't certify the middle of a run, so every timed run gets its own
-    probe). Policy mirrors tools/executor_bench.py: the paging hazard is
-    ONE-SIDED (it can only slow a run), so when all per-run probes read
-    healthy publish the median of ``reps`` walls; when any run is
-    poisoned publish the best (min) wall — the max throughput estimates
-    the plan's own speed. If EVERY probe of the first round is degraded,
-    one more round is taken before settling for best-of.
-
-    The plan is BUILT inside the timed window and the cache cleared
-    before each rep: an operator that persists internally and runs
-    driver-side jobs at build time (dsir's selection pass) would
-    otherwise do its dominant work before t0 and hand the timed action
-    an InMemoryRelation — the CLAUDE.md warm-pass-cache gotcha, which
-    jobs/llmops_scale.py fixed but this shared helper still had. For
-    plain plan-composition queries the build adds only analysis
-    milliseconds.
-    Returns (wall, rowcount, walls, probes, healthy)."""
-    from pyspark.sql import SparkSession
-
-    walls: list[float] = []
-    probes: list[float] = []
-    n = 0
-    for attempt in range(2):
-        if attempt > 0:
-            # the retry round exists to catch a CLEAN window — touching
-            # pages is what heals the host, so warm instead of hoping
-            _warm_host(budget_s=30.0)
-        for _ in range(reps):
-            s = SparkSession.getActiveSession()
-            if s is not None:
-                s.catalog.clearCache()
-            t0 = time.time()
-            df = fn()
-            n = action(df)
-            walls.append(time.time() - t0)
-            probes.append(_host_mem_probe_mb_s())
-        # retry unless the round ran CLEAN end-to-end: a single healthy
-        # probe does not certify its neighbours (the hazard strikes
-        # mid-run), and the retry round is cheap next to publishing a
-        # host-degraded wall
-        if all(p >= 500.0 for p in probes[-reps:]):
-            break
-    healthy = all(p >= 500.0 for p in probes)
-    wall = sorted(walls)[len(walls) // 2] if healthy else min(walls)
-    return wall, n, walls, probes, healthy
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # 500k docs ≈ 4.5M lines: big enough that the measured pass (~7 s)
     # dominates fixed per-job overheads, small enough to stay quick.
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "500000"))
 
-    from loganalyzer_spark import datagen, pipeline
+    from pyspark.sql import DataFrame
+
+    from loganalyzer_spark import measure, pipeline
     from loganalyzer_spark import queries as qmod
     from loganalyzer_spark.session import get_spark
+    from tools.ladder import ensure_corpus
 
+    # End-to-end input: the input_hint-shaped pages corpus (url,
+    # warc_ts, html, text, lang), staged once before this JVM starts;
+    # synthesis cost is excluded from the measured DAG.
+    corpus = ensure_corpus("pages", n_docs)
     spark = get_spark(app="loganalyzer_spark_bench")
-    probe_start, warm_wait_s = _warm_host()
+    probe_cold, probe_start, warm_wait_s = measure.wait_healthy()
 
     registry = qmod.queries()
     timings: dict[str, float] = {}
@@ -177,82 +62,32 @@ def main() -> None:
     # every dim table, the fact scans, and the session's first-job
     # costs (hadoop conf broadcast, scan codegen, JIT ramp). Per-plan
     # cold-compile of the OTHER queries lands in each query's first
-    # timed rep, which the settle policy already discards (median of 3
-    # when healthy, min under one-sided noise) — so no per-query warm
-    # pass is needed; dropping them saves ~30 s per driver round.
-    _run_count(registry[HEADLINE[0]](spark, sf_dir))
+    # timed rep, which the timing policy discards.
+    registry[HEADLINE[0]](spark, sf_dir).count()
     for name in HEADLINE:
         if name not in registry:
             continue
-        # probe-gated timing over FRESH plan instances — re-counting
-        # the same DataFrame would reuse AQE's materialized stages and
-        # measure nothing.
-        wall, _, _, probes, healthy = _gated_runs(
-            lambda: registry[name](spark, sf_dir)
-        )
-        timings[name] = round(wall, 3)
-        q_probe_min[name] = min(probes)
-        q_policy[name] = "median" if healthy else "best_of_one_sided_noise"
+        # count(), not materialize: the headline number must stay
+        # comparable round over round, and these queries' expensive
+        # columns feed joins/aggregates the count still requires
+        t = measure.timed(lambda: registry[name](spark, sf_dir), DataFrame.count)
+        timings[name] = round(t.wall, 3)
+        q_probe_min[name] = min(t.probes)
+        q_policy[name] = "median" if t.healthy else "best_of_one_sided_noise"
 
-    # End-to-end throughput over the input_hint-shaped pages corpus
-    # (url, warc_ts, html, text, lang — mirrors the north rule's
-    # Iceberg table; synthesis cost is excluded from the measured DAG).
-    # Corpus is generated once and reused; the cache key includes a
-    # hash of the generator SQL so a datagen change invalidates it.
-    import hashlib
-
-    gen_v = hashlib.md5(
-        datagen.raw_lines_sql("spark", "x").encode()
-    ).hexdigest()[:8]
-    corpus = f"/tmp/loganalyzer_bench/bench_pages_{n_docs}_{gen_v}"
-    if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-        datagen.gen_web_pages(spark, n_docs).repartition(64).write.mode(
-            "overwrite"
-        ).parquet(corpus)
     pages = spark.read.parquet(corpus)
 
     def build_agg():
         routed = pipeline.routed_from_pages(spark, pages)
         return pipeline.sink_aggregates(routed, "1 minute")
 
-    # No separate warm: the first timed rep is the cold one and the
-    # settle policy below (median when healthy, min under noise)
-    # discards it; the full per-run spread is published regardless.
-    # The e2e section is the bench's biggest memory churner and the
-    # most exposed to the virtio free-page-reporting hazard, which is
-    # ONE-SIDED (it can only slow a run). Probe after every timed run;
-    # publish the median when all runs are healthy, else best-of the
-    # runs we have (same policy as tools/executor_bench.py), retrying
-    # once after a cooldown if every run was poisoned.
-    e2e_walls: list[float] = []
-    e2e_probes: list[float] = []
-    n_groups = 0
-    for attempt in range(2):
-        for _ in range(3):
-            df = build_agg()
-            t0 = time.time()
-            n_groups = _run_count(df)
-            e2e_walls.append(time.time() - t0)
-            e2e_probes.append(_host_mem_probe_mb_s())
-        if max(e2e_probes) >= 500.0:
-            break
-        _warm_host(budget_s=60.0)  # hazard swings within minutes; one retry round
-    healthy = all(p >= 500.0 for p in e2e_probes[-3:])
-    e2e = sorted(e2e_walls)[len(e2e_walls) // 2] if healthy else min(e2e_walls)
-    timings["pipeline_e2e"] = round(e2e, 3)
-
-    # Additional fully-materialized e2e passes (hash every output
-    # column): count() on the final aggregate prunes the aggregate
-    # VALUE expressions (group keys suffice for counting), so the
-    # count-based number above — kept as the round-over-round headline
-    # — slightly understates the full-output cost. Published alongside,
-    # not in the headline total, under the SAME probe-gated
-    # median-or-best policy as everything else (a single unprobed run
-    # would publish a hazard-degraded wall with nothing to attribute
-    # it to).
-    e2e_mat, _, mat_walls, mat_probes, mat_healthy = _gated_runs(
-        build_agg, action=_run_materialize
-    )
+    e2e = measure.timed(build_agg, DataFrame.count)
+    timings["pipeline_e2e"] = round(e2e.wall, 3)
+    # Fully materialized e2e (hash every output column): count() on the
+    # final aggregate prunes the aggregate VALUE expressions, so the
+    # count-based headline slightly understates the full-output cost.
+    # Published alongside, not in the headline total.
+    mat = measure.timed(build_agg)
 
     total = sum(timings.values())
     out = {
@@ -262,24 +97,26 @@ def main() -> None:
         "queries": timings,
         "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
         "e2e_docs": n_docs,
-        "e2e_docs_per_sec": round(n_docs / e2e, 1),
-        "e2e_docs_per_sec_materialized": round(n_docs / e2e_mat, 1),
-        "e2e_wall_materialized_sec": round(e2e_mat, 3),
-        "e2e_mat_run_walls_sec": [round(w, 3) for w in mat_walls],
-        "e2e_mat_run_probes_mb_s": mat_probes,
-        "e2e_mat_policy": "median3" if mat_healthy else "best_of_runs_one_sided_noise",
-        "e2e_agg_groups": n_groups,
+        "e2e_docs_per_sec": round(n_docs / e2e.wall, 1),
+        "e2e_docs_per_sec_materialized": round(n_docs / mat.wall, 1),
+        "e2e_wall_materialized_sec": round(mat.wall, 3),
+        "e2e_mat_run_walls_sec": [round(w, 3) for w in mat.walls],
+        "e2e_mat_run_probes_mb_s": mat.probes,
+        "e2e_mat_policy": "median3" if mat.healthy else "best_of_runs_one_sided_noise",
+        "e2e_agg_groups": e2e.rows,
         "cores": os.environ.get("SPARK_GRAFT_CPUS", "all"),
         # Probe sampled before AND after: the hazard can strike mid-run
         # (observed: 2114 MB/s at launch, 26 MB/s at the end), so the
         # headline health field is the conservative min of the two.
-        "host_first_touch_mb_s": min(probe_start, probe_end := _host_mem_probe_mb_s()),
+        "host_first_touch_mb_s": min(probe_start, probe_end := measure.first_touch_mb_s()),
+        # the first reading, before wait_healthy waited out a degraded host
+        "host_first_touch_mb_s_cold": probe_cold,
         "host_first_touch_mb_s_start": probe_start,
         "host_warm_wait_s": warm_wait_s,
         "host_first_touch_mb_s_end": probe_end,
-        "e2e_run_walls_sec": [round(w, 3) for w in e2e_walls],
-        "e2e_run_probes_mb_s": e2e_probes,
-        "e2e_policy": "median3" if healthy else "best_of_runs_one_sided_noise",
+        "e2e_run_walls_sec": [round(w, 3) for w in e2e.walls],
+        "e2e_run_probes_mb_s": e2e.probes,
+        "e2e_policy": "median3" if e2e.healthy else "best_of_runs_one_sided_noise",
         # Per-headline-query health: min per-run probe + settle policy,
         # so a slow reading is attributable to host paging vs the plan.
         "query_probe_min_mb_s": q_probe_min,

@@ -595,6 +595,10 @@ def train_zoo_and_score(
     # reference would raise inside GaussianNB the same way
     if p1 in (0.0, 1.0):
         raise ValueError("train_zoo_and_score needs both classes present")
+    # a slice whose every feature is constant has zero variance and a
+    # zero smoothing floor: gnb_coefficients would divide by zero
+    if float(np.var(X, axis=0).max()) == 0.0:
+        raise ValueError("train_zoo_and_score needs a feature that varies")
     a, bq, c0 = gnb_coefficients(mu0, var0, mu1, var1, p1)
     w_p, b_p = train_perceptron(X, y)
     w_s, b_s = train_linear_svm(X, y)

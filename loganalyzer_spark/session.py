@@ -16,15 +16,15 @@ from pyspark.sql import SparkSession
 SEED = 42
 
 
-def _default_heap() -> str:
-    """Driver heap: half of MemAvailable, so the JVM can start on a
-    host whose other tenants already hold part of the memory."""
+def default_heap_mb() -> int:
+    """Driver heap in MB: half of MemAvailable, so the JVM can start on
+    a host whose other tenants already hold part of the memory."""
     try:
         with open("/proc/meminfo") as f:
             kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
     except (OSError, StopIteration):
-        return "2g"
-    return f"{kb // 2048}m"
+        return 2048
+    return kb // 2048
 
 
 def get_spark(
@@ -59,7 +59,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.getenv("SPARK_DRIVER_MEM") or _default_heap())
+        .config("spark.driver.memory", os.getenv("SPARK_DRIVER_MEM") or f"{default_heap_mb()}m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # measured on this VM (BENCH/BASELINE.md): small parquet files

@@ -1,11 +1,11 @@
 """Staleness guard for the committed --py-files artifact.
 
 ``dist/loganalyzer_spark.zip`` ships with the repo so spark-submit
-consumers (jobs/run_pipeline.py & co.) can ``--py-files`` it directly;
+consumers (jobs/run.py) can ``--py-files`` it directly;
 a stale member import-fails only at executor time on a real cluster
 (VERDICT r4 item 4: ``streaming/evolve.py`` was committed after the
 last rebuild and was silently absent from the zip). The bench tools
-rebuild via ``tools/scaling_bench.py::make_zip`` on every run — this
+rebuild via ``tools/ladder.py::make_zip`` on every run — this
 test covers the direct-consumption path. Content comparison, not
 mtime: a git checkout resets mtimes, so mtime would both false-pass
 and false-fail.
@@ -23,7 +23,7 @@ def test_dist_zip_matches_package_tree():
     zpath = REPO / "dist" / "loganalyzer_spark.zip"
     assert zpath.exists(), (
         "dist/loganalyzer_spark.zip missing — rebuild via "
-        "tools/scaling_bench.py::make_zip()"
+        "tools/ladder.py::make_zip()"
     )
     with zipfile.ZipFile(zpath) as z:
         members = set(z.namelist())
@@ -42,5 +42,5 @@ def test_dist_zip_matches_package_tree():
         stale.extend(f"deleted on disk but still in zip: {m}" for m in extra)
     assert not stale, (
         "dist/loganalyzer_spark.zip is STALE — rebuild via "
-        "tools/scaling_bench.py::make_zip():\n  " + "\n  ".join(stale)
+        "tools/ladder.py::make_zip():\n  " + "\n  ".join(stale)
     )

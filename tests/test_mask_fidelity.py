@@ -2,15 +2,18 @@
 text must be byte-identical, per url/line, to the *reference's own
 regex chain* run in plain Python.
 
-The oracle here is the reference source itself
-(/root/reference/analyzer/extensions/ftp/patterns.py PTN_HARD_PARA,
-applied in dict order exactly as drain.py:880-887 does) — loaded by
-file path, not copied.
+The engine paths are compared with the in-repo Python-re tier
+(``patterns.mask_params``, the ordered sub chain of drain.py:880-887).
+That tier is pinned to the reference source itself
+(analyzer/extensions/ftp/patterns.py PTN_HARD_PARA, loaded by file
+path, not copied) by the checks that need the reference tree; they
+skip when it is absent.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import types
 
@@ -31,6 +34,8 @@ def _load(name: str, path: str):
 
 @pytest.fixture(scope="module")
 def ref_patterns():
+    if not os.path.isdir(REF):
+        pytest.skip(f"reference tree {REF} not present")
     sys.modules.setdefault("analyzer", types.ModuleType("analyzer"))
     utils_pkg = types.ModuleType("analyzer.utils")
     sys.modules.setdefault("analyzer.utils", utils_pkg)
@@ -58,9 +63,11 @@ def test_local_patterns_equal_reference(ref_patterns):
 
 
 @pytest.mark.parametrize("jvm", [True, False])
-def test_masked_text_byte_identical(spark, ref_patterns, jvm):
-    """Engine mask (JVM regexp chain and pandas-UDF path) == reference."""
+def test_masked_text_byte_identical(spark, jvm):
+    """Engine mask (JVM regexp chain and pandas-UDF path) == the in-repo
+    Python-re chain (== reference, test_local_patterns_equal_reference)."""
     from loganalyzer_spark import datagen
+    from loganalyzer_spark import patterns as P
     from loganalyzer_spark.operators import parse
 
     lines = datagen.raw_lines(spark, SF_SMALL)
@@ -70,7 +77,7 @@ def test_masked_text_byte_identical(spark, ref_patterns, jvm):
         .toPandas()
     )
     assert len(out) > 3000
-    expected = out["content"].map(lambda s: ref_mask(s, ref_patterns))
+    expected = out["content"].map(P.mask_params)
     diffs = out[out["masked"] != expected]
     assert diffs.empty, diffs.head(5).to_string()
 

@@ -2106,33 +2106,38 @@ def test_margin_sgd_properties_hypothesis():
         st.tuples(feat, feat, feat), min_size=6, max_size=40
     )
 
-    @settings(max_examples=40, deadline=None)
+    @settings(max_examples=40, deadline=None, derandomize=True)
     @given(rows)
     def check(pts):
         X = np.round(np.array(pts, dtype=np.float64), 3)
         # label by a fixed separator with a margin: drop points too
         # close to the plane so the set is STRICTLY separable
-        score = X @ np.array([1.0, -1.5, 0.5]) + 0.25
+        w_star = np.array([1.0, -1.5, 0.5, 0.25])  # (w*, b*)
+        score = X @ w_star[:3] + w_star[3]
         keep = np.abs(score) > 0.05
         X, score = X[keep], score[keep]
         y = (score > 0).astype(np.float64)
         if len(y) < 2:
             return
-        # iters sized to the perceptron mistake bound (R/gamma)^2 for
-        # this domain (R <= ~8.7, gamma >= 0.05/|w*|): 1e5 updates
-        # covers it; convergence early-stops long before on typical
-        # draws, so the test stays fast
-        w, b = train_perceptron(X, y, iters=4000)
+        # iters = this draw's perceptron mistake bound (R/gamma)^2 on the
+        # bias-augmented rows, plus the clean epoch that detects
+        # convergence: every epoch before convergence makes >= 1
+        # mistake, so the bound caps the epochs needed (up to ~1.1e5
+        # over this domain; early stop keeps typical draws fast)
+        R = np.linalg.norm(np.c_[X, np.ones(len(X))], axis=1).max()
+        gamma = np.abs(score).min() / np.linalg.norm(w_star)
+        iters = int((R / gamma) ** 2) + 2
+        w, b = train_perceptron(X, y, iters=iters)
         t = 2 * y - 1
         assert ((t * (X @ w + b)) > 0).all()
-        w2, b2 = train_perceptron(X, y, iters=4000)
+        w2, b2 = train_perceptron(X, y, iters=iters)
         assert (w2 == w).all() and b2 == b
         if 0.0 < y.mean() < 1.0:
             mu0, var0, mu1, var1, p1 = train_gnb(X, y)
             assert all(v > 0 for v in var0 + var1) or (
                 # all-identical rows: zero variance everywhere means a
                 # zero smoothing floor too; gnb then has no signal and
-                # the caller's degenerate-input guard applies
+                # train_zoo_and_score's zero-variance guard applies
                 float(np.var(X, axis=0).max()) == 0.0
             )
             if all(v > 0 for v in var0 + var1):
@@ -2141,3 +2146,16 @@ def test_margin_sgd_properties_hypothesis():
                 assert np.isfinite(c0)
 
     check()
+
+
+def test_train_zoo_rejects_constant_features(spark):
+    """A training slice whose every feature is constant has no GNB
+    variance to smooth by: clear ValueError, not ZeroDivisionError."""
+    from loganalyzer_spark.scoring import train_zoo_and_score
+
+    vectors = spark.createDataFrame(
+        [(i, [1.0, 0.0, 2.0], i % 2) for i in range(6)],
+        "doc_id long, vec array<double>, label int",
+    )
+    with pytest.raises(ValueError, match="feature that varies"):
+        train_zoo_and_score(spark, vectors)

@@ -2,7 +2,7 @@
 
 Times the registered dedup / quality / web-prep / packing queries at a
 given SF dir (default sf0.1 — 10x the correctness-gate corpus) with
-bench.py's probe-gated fresh-plan policy, and rewrites
+``measure.timed``'s probe-gated fresh-plan policy, and rewrites
 BENCH/LLMOPS.md. These queries are NOT in bench.py's headline set (the
 driver's round-over-round number must stay comparable), so this file
 is their published scale evidence.
@@ -43,80 +43,41 @@ QUERIES = [
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from bench import _gated_runs, _host_mem_probe_mb_s, _run_materialize
-
+    from loganalyzer_spark import measure
     from loganalyzer_spark import queries as qmod
     from loganalyzer_spark.session import get_spark
 
     spark = get_spark(app="llmops_bench")
-    probe_start = _host_mem_probe_mb_s()
     registry = qmod.queries()
 
     # shared warm: touch the two fact tables the tier reads
     spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-
-    # Pre-warm spin: the host's first-touch rate is routinely degraded
-    # for the first minute of a session (virtio free-page reporting —
-    # CLAUDE.md), which poisoned the FIRST few rows of every published
-    # table. Wait for two consecutive healthy probes before timing;
-    # the per-run probes still gate each rep after this.
-    import time as _time
-
-    streak = 0
-    for _ in range(60):
-        if _host_mem_probe_mb_s() >= 1000.0:
-            streak += 1
-            if streak >= 2:
-                break
-        else:
-            streak = 0
-            _time.sleep(2)
-
-    def measure(name):
-        # _run_materialize, not count(): count() lets Catalyst prune the
-        # operator under test (ADVICE r4 — the counted sequence_packing
-        # plan was just Filter+Range). Hashing every output column times
-        # the real plan.
-        wall, n, walls, probes, healthy = _gated_runs(
-            lambda: registry[name](spark, sf_dir), action=_run_materialize
-        )
-        return {
-            "query": name,
-            "wall_s": round(wall, 3),
-            "rows": n,
-            "policy": "median3" if healthy else "best_of_one_sided_noise",
-            "probe_min_mb_s": min(probes),
-            "all_walls_s": [round(w, 3) for w in walls],
-        }
+    # the host's first-touch rate is routinely degraded for the first
+    # minute of a session; wait it out before the first row is timed
+    probe_start = measure.wait_healthy()[1]
 
     rows = []
     for name in QUERIES:
-        r = measure(name)
+        # materialize, not count(): count() lets Catalyst prune the
+        # operator under test
+        t = measure.timed(lambda: registry[name](spark, sf_dir))
+        r = {
+            "query": name,
+            "wall_s": round(t.wall, 3),
+            "rows": t.rows,
+            "policy": "median3" if t.healthy else "best_of_one_sided_noise",
+            "probe_min_mb_s": min(t.probes),
+            "all_walls_s": [round(w, 3) for w in t.walls],
+        }
         rows.append(r)
         print(f"{name}: {r['wall_s']:.3f}s rows={r['rows']} ({r['policy']})",
               flush=True)
 
-    # Retry pass: the paging hazard strikes mid-run (CLAUDE.md), so a
-    # degraded row may just have been unlucky — re-measure ONLY the
-    # noisy rows (twice at most) and keep whichever result has the
-    # healthier probe floor (one-sided hazard: healthier probe = the
-    # measurement closer to the plan's own speed).
-    for _ in range(2):
-        noisy = [i for i, r in enumerate(rows) if r["probe_min_mb_s"] < 500.0]
-        if not noisy:
-            break
-        for i in noisy:
-            r2 = measure(rows[i]["query"])
-            if r2["probe_min_mb_s"] > rows[i]["probe_min_mb_s"]:
-                rows[i] = r2
-            print(f"retry {r2['query']}: {r2['wall_s']:.3f}s "
-                  f"probe_min={r2['probe_min_mb_s']}", flush=True)
-
     out = {
         "sf_dir": sf_dir,
         "host_probe_start_mb_s": probe_start,
-        "host_probe_end_mb_s": _host_mem_probe_mb_s(),
+        "host_probe_end_mb_s": measure.first_touch_mb_s(),
         "results": rows,
     }
     spark.stop()
@@ -125,10 +86,10 @@ def main() -> None:
         "# BENCH/LLMOPS — training-data operator tier at "
         + sf_dir.rstrip("/").rsplit("/", 1)[-1],
         "",
-        "Probe-gated fresh-plan timings (bench.py policy: median of 3 on",
+        "Probe-gated fresh-plan timings (measure.timed: median of 3 on",
         "healthy per-run probes, best-of under the one-sided host paging",
         "hazard; every rep's wall published). Timed action hashes every",
-        "output column (bench._run_materialize) so Catalyst cannot prune",
+        "output column (measure.materialize) so Catalyst cannot prune",
         "the operator under test — plain count() timings lied for the",
         "scan-shaped ops (ADVICE r4). These operators are the",
         "dedup / quality / web-prep / packing tier the headline bench",

@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -51,17 +50,15 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from loganalyzer_spark import datagen
+    from loganalyzer_spark import datagen, measure
     from loganalyzer_spark.operators import match, parse
     from loganalyzer_spark.session import get_spark
+    from tools.ladder import ensure_corpus
 
+    corpus = ensure_corpus("pages", n_docs)
     spark = get_spark(app="match_scale")
-    corpus = f"/tmp/loganalyzer_bench/corpus_{n_docs}"
-    if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-        datagen.gen_raw_lines(spark, n_docs).write.mode("overwrite").parquet(
-            corpus
-        )
-    masked = parse.mask(parse.wash(spark.read.parquet(corpus)))
+    lines = parse.pages_to_lines(spark.read.parquet(corpus))
+    masked = parse.mask(parse.wash(lines))
     masked = masked.select("doc_id", "line_no", "masked").localCheckpoint(
         eager=True
     )
@@ -89,10 +86,7 @@ def main() -> None:
                 F.sum(F.length("event_id")), F.sum("is_new")
             )
 
-        build().collect()  # warm
-        t0 = time.time()
-        build().collect()
-        results[size] = round(time.time() - t0, 3)
+        results[size] = round(measure.timed(build).wall, 3)
         print(f"lib={size}: {results[size]}s")
 
     print(

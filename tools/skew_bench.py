@@ -16,7 +16,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -26,17 +25,14 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
     from pyspark.sql import functions as F
 
-    from loganalyzer_spark import datagen, pipeline
+    from loganalyzer_spark import measure, pipeline
     from loganalyzer_spark.operators import enrich
     from loganalyzer_spark.session import get_spark
+    from tools.ladder import ensure_corpus
 
+    corpus = ensure_corpus("pages", n_docs)
     spark = get_spark(app="skew_bench")
-    corpus = f"/tmp/loganalyzer_bench/corpus_{n_docs}"
-    if not os.path.exists(os.path.join(corpus, "_SUCCESS")):
-        datagen.gen_raw_lines(spark, n_docs).write.mode("overwrite").parquet(
-            corpus
-        )
-    routed = pipeline.routed_lines(
+    routed = pipeline.routed_from_pages(
         spark, spark.read.parquet(corpus)
     ).select("doc_id", "line_no", "event_id", "severity", "sink_class")
     routed = routed.localCheckpoint(eager=True)  # isolate write cost
@@ -48,23 +44,21 @@ def main() -> None:
 
     out = "/tmp/loganalyzer_bench/skew_out"
 
-    def naive():
+    def naive(df):
         # one writer task per sink: repartition on the raw key
-        routed.repartition("sink_class").write.mode("overwrite").partitionBy(
+        shutil.rmtree(out, ignore_errors=True)
+        df.repartition("sink_class").write.mode("overwrite").partitionBy(
             "sink_class"
         ).parquet(out)
 
-    def salted():
-        enrich.write_sinks(routed, out, salt_buckets=16)
+    def salted(df):
+        shutil.rmtree(out, ignore_errors=True)
+        enrich.write_sinks(df, out, salt_buckets=16)
 
-    results = {}
-    for name, fn in (("naive", naive), ("salted", salted)):
-        shutil.rmtree(out, ignore_errors=True)
-        fn()  # warm
-        shutil.rmtree(out, ignore_errors=True)
-        t0 = time.time()
-        fn()
-        results[name] = round(time.time() - t0, 3)
+    results = {
+        name: round(measure.timed(lambda: routed, write).wall, 3)
+        for name, write in (("naive", naive), ("salted", salted))
+    }
 
     print(
         json.dumps(
