@@ -11,19 +11,20 @@ DuckDB-oracle-checkable; no reliance on Spark's internal ``hash()``.
 Scale notes:
   * Exact dedup: one hash-groupBy shuffle on the digest — the digest is
     uniform, so no skew.
-  * MinHash/LSH: signatures are narrow per-row projections; the only
-    shuffle is the band-bucket self-join. Bucket keys (band_id ×
-    band_hash) are high-cardinality for DISTINCT content, but a crawl
-    is full of mass-duplicate clusters (boilerplate, mirrored pages):
-    m identical docs share every band, so an uncapped self-join emits
-    m²·bands/2 candidate pairs — a scale-killer at 100 TB skew. Both
-    band joins therefore cap the per-bucket blowup (``bucket_cap``):
-    buckets at or under the cap run the exact all-pairs join;
-    oversized buckets degrade to a bounded "star" (each member paired
-    with the bucket's smallest member, O(m) pairs) which still
-    connects the whole cluster for the downstream verify/connected-
-    components pass. Run ``exact_dedup`` first so byte-identical
-    copies never reach the LSH join at all.
+  * Near-dup blocking (MinHash bands, SimHash blocks, hyperplane-LSH
+    bands): signatures are narrow per-row projections; the only
+    shuffle is the bucket self-join. Bucket keys (band × value) are
+    high-cardinality for DISTINCT content, but a crawl is full of
+    mass-duplicate clusters (boilerplate, mirrored pages): m identical
+    docs share every band, so an uncapped self-join emits m²·bands/2
+    candidate pairs — a scale-killer at 100 TB skew. All three
+    blockers therefore run one capped self-join, :func:`_capped_pairs`
+    (``bucket_cap``): buckets at or under the cap run the exact
+    all-pairs join; oversized buckets degrade to a bounded "star"
+    (each member paired with the bucket's smallest member, O(m) pairs)
+    which still connects the whole cluster for the downstream
+    verify/connected-components pass. Run ``exact_dedup`` first so
+    byte-identical copies never reach the LSH join at all.
   * Pair generation dedupes (a < b) to avoid mirrored pairs.
 """
 
@@ -118,6 +119,75 @@ def minhash_signatures(
     return df.select(key, "shingles", sig.alias("sig"))
 
 
+def _capped_pairs(rows: DataFrame, buckets: F.Column, bucket_cap: int) -> DataFrame:
+    """The bucket-capped self-join every near-dup blocker shares.
+
+    ``rows``: one row per item with ``k`` (id), optionally ``p`` (the
+    payload the verify step needs: fingerprint, vector) and the inputs
+    of ``buckets``, an array expression over ``rows`` giving the item's
+    bucket value in each band. Items sharing a (band, bucket) are
+    candidates. Output: distinct ``(a, b)`` with ``a < b``, plus
+    ``pa``/``pb`` (each side's payload) when ``p`` is given.
+
+    ``buckets`` is evaluated inside the explode: projected as a column
+    of ``rows`` instead, Catalyst would inline the signature into the
+    per-band lambda and recompute it once per band.
+
+    Buckets with ≤ ``bucket_cap`` members run the exact all-pairs
+    join; larger buckets emit only the O(m) star to the bucket's
+    smallest member (its payload re-attached from the tiny broadcast
+    dim of oversized-bucket reps). The cap costs ONE window pass over
+    the banded rows, hash-partitioned like the join key, so the
+    self-join reuses it — no extra shuffle.
+    """
+    keys = ["band_id", "bucket"]
+    pay = "p" in rows.columns
+
+    def pay_as(name: str) -> list[F.Column]:
+        return [F.col("p").alias(name)] if pay else []
+
+    bw = Window.partitionBy(*keys)
+    banded = (
+        rows.select("k", *pay_as("p"), F.posexplode(buckets).alias(*keys))
+        .withColumn("_bn", F.count(F.lit(1)).over(bw))
+        .withColumn("_rep", F.min("k").over(bw))
+    )
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(*keys, F.col("k").alias(s), *pay_as("p" + s))
+
+    small = banded.filter(F.col("_bn") <= bucket_cap)
+    big = banded.filter(F.col("_bn") > bucket_cap)
+    exact = side(small, "a").join(side(small, "b"), keys).filter(F.col("a") < F.col("b"))
+    star = big.filter(F.col("k") > F.col("_rep")).select(
+        *keys, F.col("_rep").alias("a"), F.col("k").alias("b"), *pay_as("pb")
+    )
+    if pay:
+        reps = big.filter(F.col("k") == F.col("_rep")).select(*keys, *pay_as("pa"))
+        star = star.join(F.broadcast(reps.dropDuplicates(keys)), keys)
+    out = ["a", "pa", "b", "pb"] if pay else ["a", "b"]
+    return exact.select(*out).unionByName(star.select(*out)).dropDuplicates(["a", "b"])
+
+
+def _bit_bands(bits: str, nbands: int, width: int) -> F.Column:
+    """Split a long signature column into ``nbands`` ``width``-bit fields."""
+    mask = F.lit((1 << width) - 1)
+    return F.array(
+        *[F.shiftright(bits, width * i).bitwiseAND(mask) for i in range(nbands)]
+    )
+
+
+def minhash_bands(bands: int) -> F.Column:
+    """Band hashes of the MinHash ``sig`` column: band b is the md5 of
+    its ``size(sig) / bands`` rows joined by '_'. Shared by the batch
+    join and ``streaming.near_dup`` so their bucket keys cannot drift."""
+    rows = f"int(size(sig) / {bands})"
+    return F.expr(
+        f"transform(sequence(0, {bands} - 1),"
+        f" b -> md5(array_join(slice(sig, b * {rows} + 1, {rows}), '_')))"
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame, key: str = "doc_id", bands: int = 4, bucket_cap: int = 256
 ) -> DataFrame:
@@ -126,45 +196,14 @@ def lsh_candidate_pairs(
     Output: (a, b) candidate pairs with a < b, distinct.
 
     ``bucket_cap`` bounds the quadratic blowup of mass-duplicate
-    clusters (m docs sharing every band → m²·bands/2 pairs uncapped):
-    buckets with ≤ cap members run the exact all-pairs join; larger
-    buckets emit only the O(m) star to the bucket's smallest member,
-    which still connects the cluster for the downstream Jaccard-verify
-    / connected-components pass (near_dup_survivors). Precondition for
-    full pair recall: run :func:`exact_dedup` first so byte-identical
-    copies collapse before banding. The cap costs ONE extra window
-    pass over the banded rows (same partitioning as the join key — no
-    extra shuffle: the window's hash partitioning is reused by the
-    self-join).
+    clusters (see :func:`_capped_pairs`); the star still connects the
+    cluster for the downstream Jaccard-verify / connected-components
+    pass (near_dup_survivors). Precondition for full pair recall: run
+    :func:`exact_dedup` first so byte-identical copies collapse before
+    banding.
     """
-    rows_per_band_expr = f"int(size(sig) / {bands})"
-    banded = sigs.select(
-        F.col(key).alias("k"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {bands} - 1),"
-                f" b -> md5(array_join(slice(sig, b * {rows_per_band_expr} + 1,"
-                f" {rows_per_band_expr}), '_')))"
-            )
-        ).alias("band_id", "band_hash"),
-    )
-    bw = Window.partitionBy("band_id", "band_hash")
-    banded = banded.withColumn("_bn", F.count(F.lit(1)).over(bw)).withColumn(
-        "_rep", F.min("k").over(bw)
-    )
-    small = banded.filter(F.col("_bn") <= bucket_cap)
-    left = small.select(F.col("k").alias("a"), "band_id", "band_hash")
-    right = small.select(F.col("k").alias("b"), "band_id", "band_hash")
-    exact = (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-    star = (
-        banded.filter((F.col("_bn") > bucket_cap) & (F.col("k") > F.col("_rep")))
-        .select(F.col("_rep").alias("a"), F.col("k").alias("b"))
-    )
-    return exact.unionByName(star).distinct()
+    rows = sigs.select(F.col(key).alias("k"), "sig")
+    return _capped_pairs(rows, minhash_bands(bands), bucket_cap)
 
 
 def jaccard_pairs(
@@ -227,15 +266,15 @@ def simhash_near_pairs(
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance on SimHash fingerprints.
 
-    Scale path: block on fingerprint quarters (a pair within distance d
-    must agree on ≥1 of d+1 blocks) then verify with bit_count(xor).
+    Scale path: split the 32-bit fingerprint into d+1 blocks of
+    ``32 // (d+1)`` bits (a pair within distance d must agree on ≥1 of
+    them) then verify with bit_count(xor). ``max_hamming`` must be
+    below 32: at 32 a block has zero bits, every document shares it and
+    only the capped star would survive.
 
-    ``bucket_cap`` bounds mass-duplicate quadratic blowup exactly as in
-    :func:`lsh_candidate_pairs` / :func:`embedding_near_dups_lsh`:
-    m identical documents share EVERY block (identical fingerprints),
-    so an uncapped self-join emits m²·(d+1)/2 pairs. Blocks with ≤ cap
-    members run the exact all-pairs join; oversized blocks emit only
-    the O(m) star to the block's smallest member. Star pairs still pass
+    ``bucket_cap`` bounds mass-duplicate quadratic blowup through
+    :func:`_capped_pairs`: m identical documents share EVERY block, so
+    an uncapped self-join emits m²·(d+1)/2 pairs. Star pairs still pass
     the exact bit_count verify, so precision stays 1.0. Recall inside
     an oversized block keeps cluster connectivity only when its members
     share the representative's fingerprint (the mass-duplicate case the
@@ -245,56 +284,16 @@ def simhash_near_pairs(
     shared block is that one is lost outright when both star edges
     (rep, u) and (rep, v) exceed ``max_hamming``.
     """
+    if not 0 <= max_hamming < 32:
+        raise ValueError(
+            f"simhash_near_pairs: max_hamming={max_hamming} must be in "
+            "[0, 31] for 32-bit fingerprints (d+1 blocks of 32 // (d+1) bits)"
+        )
     nblocks = max_hamming + 1
-    blocked = fps.select(
-        F.col(key).alias("k"),
-        F.col("simhash").alias("fp"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), 32 // nblocks * i).bitwiseAND(
-                        F.lit((1 << (32 // nblocks)) - 1)
-                    )
-                    for i in range(nblocks)
-                ]
-            )
-        ).alias("block_id", "block_val"),
-    )
-    bw = Window.partitionBy("block_id", "block_val")
-    blocked = blocked.withColumn("_bn", F.count(F.lit(1)).over(bw)).withColumn(
-        "_rep", F.min("k").over(bw)
-    )
-    small = blocked.filter(F.col("_bn") <= bucket_cap)
-    left = small.select(F.col("k").alias("a"), F.col("fp"), "block_id", "block_val")
-    right = small.select(
-        F.col("k").alias("b"), F.col("fp").alias("fp2"), "block_id", "block_val"
-    )
-    exact = (
-        left.join(right, ["block_id", "block_val"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "fp", "b", "fp2")
-    )
-    # Oversized blocks: star to the block min; re-attach the rep's
-    # fingerprint via the (tiny) distinct-rep dim so the exact Hamming
-    # verify below still runs on every emitted pair.
-    big = blocked.filter((F.col("_bn") > bucket_cap) & (F.col("k") > F.col("_rep")))
-    reps = (
-        blocked.filter(F.col("_bn") > bucket_cap)
-        .filter(F.col("k") == F.col("_rep"))
-        .select("block_id", "block_val", F.col("fp"))
-        .dropDuplicates(["block_id", "block_val"])
-    )
-    star = big.join(F.broadcast(reps.withColumnRenamed("fp", "_repfp")),
-                    ["block_id", "block_val"]).select(
-        F.col("_rep").alias("a"),
-        F.col("_repfp").alias("fp"),
-        F.col("k").alias("b"),
-        F.col("fp").alias("fp2"),
-    )
+    rows = fps.select(F.col(key).alias("k"), F.col("simhash").alias("p"))
     return (
-        exact.unionByName(star)
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("fp").bitwiseXOR(F.col("fp2"))))
+        _capped_pairs(rows, _bit_bands("p", nblocks, 32 // nblocks), bucket_cap)
+        .withColumn("hamming", F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
     )
@@ -305,11 +304,24 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 
 from loganalyzer_spark.operators.similarity import (  # noqa: E402
-    _dot,
-    _norm,
+    _cosine,
+    _nvec,
     hyperplane_sign_bits,
     lsh_planes,
 )
+
+
+def _cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Verify (a, pa, b, pb) pairs of :func:`_nvec` payloads: keep
+    rounded cosine ≥ ``threshold``; zero vectors never qualify."""
+    return (
+        pairs
+        # filter on the ROUNDED cosine (like the oracle SQL), so the
+        # threshold boundary is not data-dependent on the 7th decimal
+        .withColumn("cosine", F.round(_cosine("pa", "pb"), 6))
+        .filter(F.col("cosine") >= threshold)
+        .select("a", "b", "cosine")
+    )
 
 
 def embedding_near_dups(
@@ -325,21 +337,9 @@ def embedding_near_dups(
     same verify predicate, but candidate generation is a bucket
     equi-join, not a cross join.
     """
-    a = emb.select(F.col(key).alias("a"), F.col(vec).alias("avec"))
-    b = emb.select(F.col(key).alias("b"), F.col(vec).alias("bvec"))
-    return (
-        a.join(b, F.col("a") < F.col("b"))
-        # filter on the ROUNDED cosine (like the oracle SQL), so the
-        # threshold boundary is not data-dependent on the 7th decimal
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot("avec", "bvec") / (_norm("avec") * _norm("bvec")), 6
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
-    )
+    a = emb.select(F.col(key).alias("a"), _nvec(vec).alias("pa"))
+    b = emb.select(F.col(key).alias("b"), _nvec(vec).alias("pb"))
+    return _cosine_pairs(a.join(b, F.col("a") < F.col("b")), threshold)
 
 
 def lsh_band_plan(
@@ -387,120 +387,41 @@ def embedding_near_dups_lsh(
     threshold: float = 0.9,
     key: str = "vec_id",
     vec: str = "embedding",
-    nbits: int | None = None,
-    dim: int | None = None,
-    nbands: int | None = None,
     bucket_cap: int = 256,
 ) -> DataFrame:
     """Scale path: hyperplane-LSH blocked near-dup pairs.
 
-    The nbits signature is split into ``nbands`` bands (banding boosts
-    recall like MinHash-LSH: near vectors agree on at least one whole
-    band with high probability). Pairs sharing any band bucket are
+    The sign-bit signature is split into bands (banding boosts recall
+    like MinHash-LSH: near vectors agree on at least one whole band
+    with high probability). Pairs sharing any band bucket are
     exact-verified with the same cosine predicate as the baseline —
     so precision is 1.0 and only recall is approximate. The join key
-    (band_id, band_bits) distributes; no cross join anywhere.
+    (band, bits) distributes; no cross join anywhere.
 
-    When ``nbands``/``nbits`` are not given, the banding is derived
-    from ``threshold`` by :func:`lsh_band_plan` so recall at the
-    operating point is ≥ 0.95 by construction (t=0.9 → 8×7 bits,
-    t=0.35 → 12×3).  Passing an explicit plan overrides — but a plan
-    chosen for one threshold silently collapses recall at another, so
-    prefer the derived default.
+    The banding is derived from ``threshold`` by :func:`lsh_band_plan`
+    so recall at the operating point is ≥ 0.95 by construction
+    (t=0.9 → 8×7 bits, t=0.35 → 12×3).  The dimension comes from the
+    first row (one bounded driver action).
 
-    ``dim`` is derived from the first row when not given (one bounded
-    driver action); a wrong hard-coded dim would silently null-pad
-    ``zip_with`` and collapse every sign bit to 0 (one giant bucket).
-
-    ``bucket_cap`` bounds mass-duplicate quadratic blowup exactly as
-    in :func:`lsh_candidate_pairs`: ≤ cap buckets all-pairs, oversized
-    buckets a bounded star to the bucket's min member (the star pairs
-    still pass the exact cosine verify, so precision stays 1.0; recall
-    inside an oversized bucket degrades from all-pairs to
-    cluster-connectivity — the right trade for m-identical-embedding
-    clusters, which exact/near dedup should have collapsed upstream).
+    ``bucket_cap`` bounds mass-duplicate quadratic blowup through
+    :func:`_capped_pairs` (the star pairs still pass the exact cosine
+    verify, so precision stays 1.0; recall inside an oversized bucket
+    degrades from all-pairs to cluster-connectivity — the right trade
+    for m-identical-embedding clusters, which exact/near dedup should
+    have collapsed upstream).
     """
-    if nbands is None or nbits is None:
-        plan_bands, plan_width = lsh_band_plan(threshold)
-        nbands = plan_bands if nbands is None else nbands
-        nbits = plan_bands * plan_width if nbits is None else nbits
-    if dim is None:
-        head = emb.select(F.size(vec).alias("d")).head()
-        if head is None:
-            return emb.sparkSession.createDataFrame(
-                [], "a long, b long, cosine double"
-            )
-        dim = head["d"]
-    planes = lsh_planes(dim, nbits)
-    sig = emb.select(
-        F.col(key).alias("vid"),
-        F.col(vec).alias("v"),
+    nbands, width = lsh_band_plan(threshold)
+    head = emb.select(F.size(vec).alias("d")).head()
+    if head is None:
+        return emb.sparkSession.createDataFrame([], "a long, b long, cosine double")
+    planes = lsh_planes(head["d"], nbands * width)
+    rows = emb.select(
+        F.col(key).alias("k"),
+        _nvec(vec).alias("p"),
         hyperplane_sign_bits(vec, planes).alias("bits"),
     )
-    band_width = nbits // nbands
-    mask = (1 << band_width) - 1
-    banded = sig.select(
-        "vid",
-        "v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.shiftright("bits", i * band_width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_bits"),
-                    )
-                    for i in range(nbands)
-                ]
-            )
-        ).alias("band"),
-    ).select("vid", "v", "band.band_id", "band.band_bits")
-    bw = Window.partitionBy("band_id", "band_bits")
-    banded = banded.withColumn("_bn", F.count(F.lit(1)).over(bw)).withColumn(
-        "_rep", F.min("vid").over(bw)
-    )
-    small = banded.filter(F.col("_bn") <= bucket_cap)
-    a = small.select(
-        F.col("vid").alias("a"), F.col("v").alias("avec"), "band_id", "band_bits"
-    )
-    b = small.select(
-        F.col("vid").alias("b"), F.col("v").alias("bvec"), "band_id", "band_bits"
-    )
-    exact_cands = a.join(b, ["band_id", "band_bits"]).filter(F.col("a") < F.col("b"))
-    # Oversized buckets: star to the bucket min. Re-attach the rep's
-    # vector via a join against the (tiny) distinct-rep dim so the
-    # exact cosine verify below still runs on every emitted pair.
-    big = banded.filter((F.col("_bn") > bucket_cap) & (F.col("vid") > F.col("_rep")))
-    reps = (
-        banded.filter(F.col("_bn") > bucket_cap)
-        .filter(F.col("vid") == F.col("_rep"))
-        .select("band_id", "band_bits", F.col("v").alias("avec"))
-        .dropDuplicates(["band_id", "band_bits"])
-    )
-    star_cands = big.join(F.broadcast(reps), ["band_id", "band_bits"]).select(
-        F.col("_rep").alias("a"),
-        "avec",
-        F.col("vid").alias("b"),
-        F.col("v").alias("bvec"),
-        "band_id",
-        "band_bits",
-    )
-    cands = (
-        exact_cands.select("a", "avec", "b", "bvec")
-        .unionByName(star_cands.select("a", "avec", "b", "bvec"))
-        .dropDuplicates(["a", "b"])
-    )
-    return (
-        cands.withColumn(
-            "cosine",
-            F.round(
-                _dot("avec", "bvec") / (_norm("avec") * _norm("bvec")), 6
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("a", "b", "cosine")
-    )
+    pairs = _capped_pairs(rows, _bit_bands("bits", nbands, width), bucket_cap)
+    return _cosine_pairs(pairs, threshold)
 
 
 # ---------------------------------------------------------------------------

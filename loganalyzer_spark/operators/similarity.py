@@ -1,34 +1,73 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force cosine top-k as the correctness baseline; LSH
-(random-hyperplane) bucketing as the scale path. Dot products run as
-JVM-side higher-order functions (``zip_with`` + ``aggregate``) —
-no Python in the hot path.
+Brute-force cosine top-k is the correctness baseline; IVF (k-means
+cells, ``nprobe`` search) is the ANN path. Both feed candidate
+(query, neighbor) rows into one scorer, :func:`_topk`. Dot products run
+as JVM-side higher-order functions (``zip_with`` + ``aggregate``) — no
+Python in the hot path.
 
-At cluster scale the query side is broadcast (top-k against a bounded
-query set); the corpus side streams. For all-pairs workloads use the
-LSH variant: candidate generation is a bucket equi-join instead of a
-cross join.
+Every cosine operator here and in ``dedup`` divides once, in
+:func:`_cosine`, which returns null for a zero vector: a vector with no
+direction is never a neighbor or a near-dup (Spark's ANSI mode would
+otherwise raise DIVIDE_BY_ZERO).
+
+The query side is broadcast (top-k against a bounded query set); the
+corpus side streams. All-pairs near-dup search lives in
+``dedup.embedding_near_dups_lsh`` (hyperplane-LSH bucket equi-join).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
-def _dot(a: str, b: str) -> F.Column:
+def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
     return F.aggregate(
-        F.zip_with(F.col(a), F.col(b), lambda x, y: x.cast("double") * y),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
 
 
-def _norm(a: str) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.col(a), F.lit(0.0), lambda acc, v: acc + v.cast("double") * v
+def _nvec(vec: str) -> F.Column:
+    """``struct(v, n)``: the vector and its L2 norm.
+
+    Built once per input row BEFORE any join: a norm inlined in the
+    per-pair cosine would re-run the O(dim) ``aggregate`` once per pair
+    instead of once per row.
+    """
+    return F.struct(F.col(vec).alias("v"), F.sqrt(_dot(vec, vec)).alias("n"))
+
+
+def _cosine(a: str, b: str) -> F.Column:
+    """Cosine of two :func:`_nvec` columns; null if either vector is zero."""
+    na, nb = F.col(f"{a}.n"), F.col(f"{b}.n")
+    return F.when((na > 0) & (nb > 0), _dot(f"{a}.v", f"{b}.v") / (na * nb))
+
+
+def _topk(cands: DataFrame, k: int) -> DataFrame:
+    """Top-k scorer over candidate rows (query_id, q, neighbor_id, c),
+    ``q``/``c`` :func:`_nvec` structs: drops self-pairs and zero vectors,
+    ranks by cosine, ties broken by neighbor id for determinism.
+
+    Output: (query_id, neighbor_id, cosine, rank).
+    """
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        cands.filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cosine", _cosine("q", "c"))
+        .filter(F.col("cosine").isNotNull())
+        .withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
+            "rank",
         )
     )
 
@@ -45,47 +84,16 @@ def cosine_topk(
     Output: (query_id, neighbor_id, cosine, rank). Ties broken by
     neighbor id for determinism.
     """
-    # Norms are precomputed per input row BEFORE the join: inlined in
-    # the per-pair cosine they would re-run the O(dim) aggregate() HOF
-    # N×Q times per side instead of once per row (the expensive-
-    # producer-in-single-consumer-column rule applied across a join).
-    q = queries.select(
-        F.col(key).alias("query_id"), F.col(vec).alias("qvec")
-    ).withColumn("qn", _norm("qvec"))
-    c = corpus.select(
-        F.col(key).alias("neighbor_id"), F.col(vec).alias("cvec")
-    ).withColumn("cn", _norm("cvec"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot("qvec", "cvec") / (F.col("qn") * F.col("cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    q = queries.select(F.col(key).alias("query_id"), _nvec(vec).alias("q"))
+    c = corpus.select(F.col(key).alias("neighbor_id"), _nvec(vec).alias("c"))
+    return _topk(c.crossJoin(F.broadcast(q)), k)
 
 
 def hyperplane_sign_bits(vec: str, planes: list[list[float]]) -> F.Column:
     """LSH signature: bit j = sign of <v, plane_j> (deterministic planes)."""
     bits = None
     for j, p in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in p])
-        d = F.aggregate(
-            F.zip_with(F.col(vec), arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        d = _dot(vec, F.array(*[F.lit(float(x)) for x in p]))
         term = F.when(d >= 0, F.lit(1 << j).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -106,59 +114,9 @@ def lsh_planes(dim: int, nbits: int = 8) -> list[list[float]]:
     return planes
 
 
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    key: str = "vec_id",
-    vec: str = "embedding",
-    nbits: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    """IVF/LSH-bucketed ANN: exact search within matching sign buckets.
-
-    Recall < 1 by construction (approximate); candidates are restricted
-    to the query's bucket, turning the cross join into an equi-join.
-    """
-    planes = lsh_planes(dim, nbits)
-    c = corpus.select(
-        F.col(key).alias("neighbor_id"),
-        F.col(vec).alias("cvec"),
-        hyperplane_sign_bits(vec, planes).alias("bucket"),
-    ).withColumn("cn", _norm("cvec"))
-    q = queries.select(
-        F.col(key).alias("query_id"),
-        F.col(vec).alias("qvec"),
-        hyperplane_sign_bits(vec, planes).alias("bucket"),
-    ).withColumn("qn", _norm("qvec"))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot("qvec", "cvec") / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: k-means cells + nprobe search
 # ---------------------------------------------------------------------------
-
-import numpy as np  # noqa: E402
-import pandas as pd  # noqa: E402
-from collections.abc import Iterator  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
 
 
 def kmeans_centroids(
@@ -251,41 +209,21 @@ def cosine_topk_ivf(
 
     c = corpus.select(
         F.col(key).alias("neighbor_id"),
-        F.col(vec).alias("cvec"),
+        _nvec(vec).alias("c"),
         F.element_at(assign1(F.col(vec)), 1).alias("cell"),
-    ).withColumn("cn", _norm("cvec"))
+    )
     q = (
         queries.select(
             F.col(key).alias("query_id"),
-            F.col(vec).alias("qvec"),
+            _nvec(vec).alias("q"),  # before the explode: once per query
             assignp(F.col(vec)).alias("cells"),
         )
-        .withColumn("qn", _norm("qvec"))  # before the explode: once per query
         .withColumn("cell", F.explode("cells"))
         .drop("cells")
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine", _dot("qvec", "cvec") / (F.col("qn") * F.col("cn"))
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
     )
     # No dedup needed before ranking: a corpus row lives in exactly ONE
     # cell (element_at(assign1, 1)) and a query's nprobe probed cells
     # are distinct argsort indices, so the equi-join emits each
     # (query_id, neighbor_id) pair at most once — a dropDuplicates here
     # was a pure extra hash exchange over every scored pair.
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _topk(c.join(F.broadcast(q), "cell"), k)

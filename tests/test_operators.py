@@ -210,6 +210,20 @@ def test_simhash_blocked_pairs_and_bucket_cap(spark):
     assert all(r["hamming"] == 0 for r in rows)
 
 
+def test_simhash_near_pairs_rejects_zero_bit_blocks(spark):
+    """max_hamming >= 32 would split a 32-bit fingerprint into 0-bit
+    blocks: every document shares one bucket and only the capped star
+    survives, silently dropping true pairs. It must raise instead."""
+    from loganalyzer_spark.operators import dedup as DD
+
+    fps = spark.createDataFrame([(1, 0), (2, 127)], "doc_id long, simhash long")
+    for d in (32, 40):
+        with pytest.raises(ValueError, match="max_hamming"):
+            DD.simhash_near_pairs(fps, max_hamming=d)
+    got = DD.simhash_near_pairs(fps, max_hamming=31, bucket_cap=2).collect()
+    assert [(r["a"], r["b"], r["hamming"]) for r in got] == [(1, 2, 7)]
+
+
 def test_simhash_close_for_near_dups(spark):
     from loganalyzer_spark.operators.dedup import simhash
 
@@ -240,20 +254,6 @@ def test_cosine_topk_exact(spark):
     out = cosine_topk(vecs, vecs.filter("vec_id = 0"), k=2).collect()
     assert [r["neighbor_id"] for r in out] == [1, 2]
     assert out[0]["cosine"] > 0.99
-
-
-def test_lsh_ann_finds_identical(spark):
-    from loganalyzer_spark.operators.similarity import cosine_topk_lsh
-
-    rows = [(i, [float((i * 7 + j * 3) % 11) for j in range(8)]) for i in range(20)]
-    rows.append((100, rows[0][1]))  # exact twin of vec 0
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = cosine_topk_lsh(
-        vecs, vecs.filter("vec_id = 0"), k=3, nbits=4, dim=8
-    ).collect()
-    # the exact twin must land in the same LSH bucket and score 1.0
-    twins = [r for r in out if r["neighbor_id"] == 100]
-    assert twins and twins[0]["cosine"] > 0.999999
 
 
 def test_multimodal_decode_stub(spark):
@@ -572,7 +572,9 @@ def test_sources_table_abstraction(spark, tmp_path):
 def test_ivf_ann_recall(spark):
     """IVF ANN: top-1 neighbor recall vs brute force on clustered data.
     Clustered vectors (what IVF assumes) -> the true nearest neighbor
-    lives in the same or a probed cell; recall@1 must be high."""
+    lives in the same or a probed cell; recall@1 must be high. An exact
+    twin of a query always lands in the query's own cell, so it must
+    rank 1 with cosine 1.0."""
     import numpy as np
 
     from loganalyzer_spark.operators.similarity import (
@@ -588,15 +590,43 @@ def test_ivf_ann_recall(spark):
         for _ in range(50):
             rows.append((vid, [float(x) for x in c + rng.normal(size=64)]))
             vid += 1
+    rows.append((1001, rows[0][1]))  # exact twin of query 0, not a query
     emb = spark.createDataFrame(rows, "vec_id: int, embedding: array<double>")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
 
     exact = cosine_topk(emb, queries, k=1)
-    ivf = cosine_topk_ivf(emb, queries, k=1, n_cells=4, nprobe=2)
+    ivf = cosine_topk_ivf(emb, queries, k=1, n_cells=4, nprobe=2).collect()
     exact_top = {r["query_id"]: r["neighbor_id"] for r in exact.collect()}
-    ivf_top = {r["query_id"]: r["neighbor_id"] for r in ivf.collect()}
+    ivf_top = {r["query_id"]: r["neighbor_id"] for r in ivf}
     hits = sum(1 for q, n in exact_top.items() if ivf_top.get(q) == n)
     assert hits / len(exact_top) >= 0.75  # probed-cell recall on clustered data
+    twin = [(r["neighbor_id"], r["cosine"], r["rank"]) for r in ivf if r["query_id"] == 0]
+    assert twin == [(1001, 1.0, 1)]
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["cosine_topk", "cosine_topk_ivf", "embedding_near_dups", "embedding_near_dups_lsh"],
+)
+def test_cosine_operators_skip_zero_vectors(spark, op):
+    """A zero vector has no direction: it is never a neighbor or a
+    near-dup, and as a query it returns no rows. Under ANSI mode an
+    unguarded cosine raises DIVIDE_BY_ZERO instead."""
+    from loganalyzer_spark.operators import dedup as DD
+    from loganalyzer_spark.operators import similarity as SIM
+
+    emb = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0]), (1, [1.0, 0.0, 0.0]), (2, [1.0, 0.1, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    if op.startswith("cosine_topk"):
+        kw = {"n_cells": 2, "nprobe": 2} if op == "cosine_topk_ivf" else {}
+        out = getattr(SIM, op)(emb, emb, k=3, **kw).collect()
+        got = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in out}
+        assert got == {(1, 2, 1), (2, 1, 1)}
+    else:
+        out = getattr(DD, op)(emb, threshold=0.5).collect()
+        assert [(r["a"], r["b"], r["cosine"]) for r in out] == [(1, 2, 0.995037)]
 
 
 def test_wash_class_label_and_labels(spark):
