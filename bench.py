@@ -105,6 +105,7 @@ def main() -> None:
         "e2e_mat_policy": "median3" if mat.healthy else "best_of_runs_one_sided_noise",
         "e2e_agg_groups": e2e.rows,
         "cores": os.environ.get("SPARK_GRAFT_CPUS", "all"),
+        "host": measure.host_stamp(),
         # Probe sampled before AND after: the hazard can strike mid-run
         # (observed: 2114 MB/s at launch, 26 MB/s at the end), so the
         # headline health field is the conservative min of the two.

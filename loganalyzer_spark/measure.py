@@ -14,6 +14,8 @@ closest estimate of the plan's own speed.
 
 from __future__ import annotations
 
+import os
+import subprocess
 import time
 from time import perf_counter
 from typing import Any, Callable, NamedTuple
@@ -33,6 +35,24 @@ def first_touch_mb_s() -> float:
     dt = perf_counter() - t0
     del a
     return round(200.0 / dt, 1)
+
+
+def host_stamp() -> str:
+    """One line naming the host a run was measured on: cpus, MemTotal,
+    driver-heap budget, Spark version, git revision of the checkout
+    this module lives in, UTC time."""
+    import pyspark
+
+    from loganalyzer_spark.session import default_heap_mb
+
+    with open("/proc/meminfo") as f:
+        mem_gb = int(f.readline().split()[1]) / 2**20
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sha = subprocess.run(["git", "describe", "--always", "--dirty"], capture_output=True,
+                         text=True, cwd=repo).stdout.strip()
+    return (f"{os.cpu_count()} cpus, MemTotal {mem_gb:.1f} GB, "
+            f"heap budget {default_heap_mb()} MB, Spark {pyspark.__version__}, "
+            f"git {sha or '?'}, {time.strftime('%Y-%m-%d %H:%M UTC', time.gmtime())}")
 
 
 def wait_healthy(budget_s: float = 90.0) -> tuple[float, float, float]:

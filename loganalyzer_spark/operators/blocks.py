@@ -38,14 +38,8 @@ def remove_blocks(
     is_start = F.col(content).rlike(start_pat)
     is_end = F.col(content).rlike(end_pat)
     marker = F.when(is_start, 1).when(is_end, 0)
-    w_prev = (
-        Window.partitionBy(doc)
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     df = lines.withColumn(
-        "_state_prev",
-        F.coalesce(F.last(marker, ignorenulls=True).over(w_prev), F.lit(0)),
+        "_state_prev", _state_prev(marker, doc, order)
     ).withColumn(
         "_removed",
         (F.col("_state_prev") == 1) | ((F.col("_state_prev") == 0) & is_start),

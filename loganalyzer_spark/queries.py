@@ -1600,12 +1600,21 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 from loganalyzer_spark import scoring as SC  # noqa: E402
 
 
-def _doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    routed = _routed(spark, sf_dir)
+def _doc_vectors(spark: SparkSession, routed: DataFrame) -> DataFrame:
+    """Per-doc dense ECM vectors ``(doc_id, vec)`` of a routed frame."""
     ecm = routed.groupBy("doc_id", "event_id").agg(F.count("*").alias("cnt"))
     return A.ecm_vectors(
         ecm, datagen.vocab_df(spark), datagen.VOCAB_SIZE, keys=("doc_id",)
     )
+
+
+def _labelled_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc ECM vectors plus ``label`` = the doc has an 'abn: ' line
+    — the training input of every trained-model query. One routed plan
+    feeds both the labels and the ECM."""
+    routed = _routed(spark, sf_dir)
+    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
+    return _doc_vectors(spark, routed).join(labels, "doc_id")
 
 
 def _score_oracle() -> str:
@@ -1638,10 +1647,11 @@ FROM _dot
 
 @register("logreg_score_jvm", _score_oracle())
 def logreg_score_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LR kernel as pure JVM column expressions (zip_with + aggregate)."""
+    """LR kernel as pure JVM column expressions: the sigmoid of the
+    weighted-sum margin (zip_with + aggregate)."""
     w, b = SC.fixed_weights(datagen.VOCAB_SIZE)
-    vec = _doc_vectors(spark, sf_dir)
-    score = SC.logreg_score_expr("vec", w, b)
+    vec = _doc_vectors(spark, _routed(spark, sf_dir))
+    score = 1 / (1 + F.exp(-SC.svm_margin_expr("vec", w, b)))
     return vec.select(
         "doc_id",
         F.round(score, 6).alias("score"),
@@ -1658,7 +1668,7 @@ def logreg_score_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w, b = SC.fixed_weights(datagen.VOCAB_SIZE)
     scorer = SC.make_logreg_scorer(spark, np.array(w), b)
-    vec = _doc_vectors(spark, sf_dir)
+    vec = _doc_vectors(spark, _routed(spark, sf_dir))
     out = scorer(vec, "vec", "score_raw")
     return out.select(
         "doc_id",
@@ -1687,9 +1697,10 @@ FROM (
 """,
 )
 def dt_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decision-tree scoring compiled to CASE WHEN column expressions."""
-    vec = _doc_vectors(spark, sf_dir)
-    return vec.select("doc_id", SC.dt_score_expr("vec").alias("score"))
+    """A fixed decision tree (scoring.DT_TREE) compiled to CASE WHEN
+    column expressions by the same compiler as the trained CART."""
+    vec = _doc_vectors(spark, _routed(spark, sf_dir))
+    return vec.select("doc_id", SC.cart_to_expr(SC.DT_TREE, "vec").alias("score"))
 
 
 @register("deeplog_train_score", None)  # driver-side LSTM training → rows-only
@@ -1723,9 +1734,7 @@ def logreg_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP1/EP2 end-to-end: train LR on the driver from the collected
     per-doc ECM (label = doc contains an 'abn: ' line), then score the
     corpus with the broadcast-weights Arrow kernel."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labelled_vectors(spark, sf_dir)
     out = SC.train_and_score(spark, vec)
     return out.select("doc_id", "label", F.round("score", 6).alias("score"), "pred")
 
@@ -1739,14 +1748,12 @@ def dt_rfc_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     sklearn absent from the image, so the gini estimator core is
     scoring.train_cart / train_random_forest), then the corpus is
     scored through the learned trees COMPILED to nested CASE WHEN
-    column expressions — zero Python in the scoring path, the
-    dt_score_expr / rfc_score_expr pattern with learned splits.
+    column expressions by cart_to_expr / forest_to_expr, the compiler
+    the fixed dt_score / rfc_score trees use — zero Python scoring.
     Rows-only like logreg_train_score (driver-side training has no SQL
     oracle); numpy-vs-compiled-expression score parity and the gini
     split math are pinned by tests/test_operators.py::test_cart_*."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labelled_vectors(spark, sf_dir)
     out = SC.train_dt_and_score(spark, vec)
     return out.select(
         "doc_id", "label", "dt_score", "dt_pred", "rfc_score", "rfc_pred"
@@ -1767,9 +1774,7 @@ def gnb_svm_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-side training has no SQL oracle); estimator parity is
     pinned by tests/test_operators.py::test_train_gnb_* and
     test_margin_sgd_*."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labelled_vectors(spark, sf_dir)
     out = SC.train_zoo_and_score(spark, vec)
     return out.select(
         "doc_id", "label",
@@ -1788,9 +1793,7 @@ def loglab_kfold_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean row. Rows-only (driver-side training, like
     logreg_train_score); ONNX export is gated out — the image has no
     sklearn-onnx (see scoring.kfold_validate docstring)."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = _doc_vectors(spark, sf_dir).join(labels, "doc_id")
+    vec = _labelled_vectors(spark, sf_dir)
     return SC.kfold_validate(spark, vec).orderBy("fold")
 
 
@@ -1807,13 +1810,7 @@ def loglizer_incremental_train_score(spark: SparkSession, sf_dir: str) -> DataFr
     training has no SQL oracle); batch-order-vs-single-shot
     convergence parity is pinned by
     tests/test_operators.py::test_incremental_partial_fit_convergence."""
-    routed = _routed(spark, sf_dir)
-    labels = routed.groupBy("doc_id").agg(F.max("is_abn").alias("label"))
-    vec = (
-        _doc_vectors(spark, sf_dir)
-        .join(labels, "doc_id")
-        .withColumn("batch", F.col("doc_id") % 4)
-    )
+    vec = _labelled_vectors(spark, sf_dir).withColumn("batch", F.col("doc_id") % 4)
     out = SC.incremental_train_and_score(spark, vec)
     return out.select("doc_id", "label", F.round("score", 6).alias("score"), "pred")
 
@@ -3067,7 +3064,7 @@ def gnb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_id, log_odds, pred)."""
     mu0, var0, mu1, var1, p1 = SC.fixed_gnb_params(datagen.VOCAB_SIZE)
     a, b, c0 = SC.gnb_coefficients(mu0, var0, mu1, var1, p1)
-    vec = _doc_vectors(spark, sf_dir)
+    vec = _doc_vectors(spark, _routed(spark, sf_dir))
     lo = SC.gnb_score_expr("vec", a, b, c0)
     return vec.select(
         "doc_id",
@@ -3103,7 +3100,7 @@ def svm_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     (loglizer.py:433-441,456-459; training differs, scoring does not).
     Output: (doc_id, margin, pred)."""
     w, b = SC.fixed_svm_weights(datagen.VOCAB_SIZE)
-    vec = _doc_vectors(spark, sf_dir)
+    vec = _doc_vectors(spark, _routed(spark, sf_dir))
     m = SC.svm_margin_expr("vec", w, b)
     return vec.select(
         "doc_id",
@@ -3150,13 +3147,11 @@ FROM _trees
 @register("rfc_score", _rfc_oracle())
 def rfc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-forest inference (loglizer.py:460-461): mean leaf
-    probability of five fixed depth-2 trees, each compiled to CASE WHEN
-    — the dt_score pattern lifted to an ensemble, zero Python.
+    probability of five fixed depth-2 trees (scoring.RFC_FOREST), each
+    compiled to CASE WHEN by the trained forest's compiler, zero Python.
     Output: (doc_id, score)."""
-    vec = _doc_vectors(spark, sf_dir)
-    return vec.select(
-        "doc_id", F.round(SC.rfc_score_expr("vec"), 6).alias("score")
-    )
+    vec = _doc_vectors(spark, _routed(spark, sf_dir))
+    return vec.select("doc_id", SC.forest_to_expr(SC.RFC_FOREST, "vec").alias("score"))
 
 
 # ---------------------------------------------------------------------------

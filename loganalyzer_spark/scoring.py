@@ -5,13 +5,17 @@ per-row Python anywhere).
 
 Training runs driver-side on the collected ECM (bounded: samples ×
 vocab_size floats — the reference also trains in one process,
-loglab.py:677-679). The trained weights are broadcast; scoring runs
-inside Arrow batches via a scalar-iterator pandas UDF (the load-once-
-per-executor pattern the reference approximates with ONNX sessions,
+loglab.py:677-679); every trainer reads the same ordered training
+slice. The trained weights are broadcast; scoring runs inside Arrow
+batches via a scalar-iterator pandas UDF (the load-once-per-executor
+pattern the reference approximates with ONNX sessions,
 loglab.py:722-727).
 
-``dt_score_expr`` is the decision-tree path compiled to JVM-side
-``CASE WHEN`` column expressions — zero Python in that variant.
+Zero-Python JVM kernels: one weighted sum (``bias + Σ term(x_i, c_i)``)
+scores every linear margin, the logistic score (``1 / (1 +
+exp(-margin))``) and the GNB log-odds; one tree compiler
+(``cart_to_expr``) turns every tree — trained or fixed — into nested
+``CASE WHEN``, and a forest is the mean of its compiled trees.
 """
 
 from __future__ import annotations
@@ -80,6 +84,27 @@ def make_logreg_scorer(spark: SparkSession, w: np.ndarray, b: float):
     return apply
 
 
+def _training_slice(
+    vectors: DataFrame, label_col: str, vec_col: str, max_rows: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The driver-side training set ``(X, y)``: the first ``max_rows``
+    vectors in ``doc_id`` order.
+
+    Ordered before ``limit``: an unordered limit over a join output
+    picks partition-order rows, which vary with AQE/shuffle layout, and
+    the forest's LCG bootstrap indexes rows by collected position. The
+    hash-gated outputs cannot tolerate a run-dependent training set."""
+    train = (
+        vectors.select("doc_id", vec_col, label_col)
+        .orderBy("doc_id")
+        .limit(max_rows)
+        .toPandas()
+    )
+    if train.empty:
+        raise ValueError("empty training slice: the vector frame has no rows")
+    return np.vstack(train[vec_col].to_numpy()), train[label_col].to_numpy()
+
+
 def train_and_score(
     spark: SparkSession,
     vectors: DataFrame,
@@ -88,23 +113,9 @@ def train_and_score(
     max_train_rows: int = 100_000,
 ) -> DataFrame:
     """Collect the (small) ECM, train LR on the driver, score the full
-    DataFrame distributed. Adds ``score`` and ``pred`` columns.
-
-    The training slice is ordered on ``doc_id`` before ``limit`` —
-    an unordered limit over a join output picks partition-order rows,
-    which vary with AQE/shuffle layout, and the hash-gated outputs
-    cannot tolerate a run-dependent training set."""
-    train = (
-        vectors.select("doc_id", vec_col, label_col)
-        .orderBy("doc_id")
-        .limit(max_train_rows)
-        .toPandas()
-    )
-    X = np.vstack(train[vec_col].to_numpy())
-    y = train[label_col].to_numpy()
-    w, b = train_logreg(X, y)
-    scorer = make_logreg_scorer(spark, w, b)
-    out = scorer(vectors, vec_col, "score")
+    DataFrame distributed. Adds ``score`` and ``pred`` columns."""
+    w, b = train_logreg(*_training_slice(vectors, label_col, vec_col, max_train_rows))
+    out = make_logreg_scorer(spark, w, b)(vectors, vec_col, "score")
     return out.withColumn("pred", (F.col("score") > 0.5).cast("int"))
 
 
@@ -201,8 +212,7 @@ def incremental_train_and_score(
     for _ in range(epochs):
         for X, y in collected:
             m.partial_fit(X, y)
-    scorer = make_logreg_scorer(spark, m.w, m.b)
-    out = scorer(vectors, vec_col, "score")
+    out = make_logreg_scorer(spark, m.w, m.b)(vectors, vec_col, "score")
     return out.withColumn("pred", (F.col("score") > 0.5).cast("int"))
 
 
@@ -229,22 +239,28 @@ def kfold_validate(
     gated out — sklearn-onnx/onnxruntime are absent from this image;
     the deployment artifact here is the broadcast (w, b) pair itself.
 
-    Returns one row per fold: (fold, n_train, n_test, accuracy) plus
-    a summary row fold = -1 with the mean accuracy (the reference's
-    ``scores.mean()`` print).
+    Returns one row per fold that has both train and test rows:
+    (fold, n_train, n_test, accuracy), plus a summary row fold = -1
+    with the mean accuracy (the reference's ``scores.mean()`` print).
+    Raises ``ValueError`` unless at least two folds qualify — with
+    fewer there is no cross-validation to average.
     """
     pdf = (
         vectors.select("doc_id", vec_col, label_col).orderBy("doc_id").toPandas()
     )
+    folds = pdf["doc_id"].to_numpy() % k
+    valid = [f for f in range(k) if 0 < (folds == f).sum() < len(folds)]
+    if len(valid) < 2:
+        raise ValueError(
+            f"kfold_validate needs two folds with both train and test rows; "
+            f"{len(folds)} vectors with k={k} give {len(valid)}"
+        )
     X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
     y = pdf[label_col].to_numpy().astype(np.float64)
-    folds = pdf["doc_id"].to_numpy() % k
     rows = []
     accs = []
-    for f in range(k):
+    for f in valid:
         test = folds == f
-        if not test.any() or test.all():
-            continue
         w, b = train_logreg(X[~test], y[~test], iters=iters, lr=lr)
         pred = (X[test] @ w + b) > 0
         acc = float((pred == (y[test] > 0.5)).mean())
@@ -263,8 +279,9 @@ def kfold_validate(
 # n_estimators=100); oldschool inference consumes the DT). sklearn is
 # absent from this image, so the estimator core is implemented
 # directly, like IncrementalLogReg above. The learned tree compiles to
-# a nested CASE WHEN column expression (the dt_score_expr pattern with
-# learned splits), so SCORING stays JVM-side with zero Python.
+# a nested CASE WHEN column expression (cart_to_expr, the same compiler
+# the fixed dt_score / rfc_score trees use), so SCORING stays JVM-side
+# with zero Python.
 # ---------------------------------------------------------------------------
 
 def train_cart(
@@ -365,8 +382,8 @@ def cart_predict(tree: tuple, X: np.ndarray) -> np.ndarray:
 
 
 def cart_to_expr(tree: tuple, vec_col: str) -> F.Column:
-    """Compile a trained CART to a nested CASE WHEN over the ECM array
-    — learned-split dt_score_expr; zero Python in the scoring path."""
+    """Compile a tree in ``train_cart``'s form to a nested CASE WHEN
+    over the ECM array — zero Python in the scoring path."""
     if tree[0] == "leaf":
         return F.lit(round(tree[1], 6))
     _, f, thr, lo, hi = tree
@@ -403,14 +420,21 @@ def train_random_forest(
     inside the janino 64 KB method limit; the collected ECM is tiny, so
     variance reduction saturates long before 100 trees here.
 
-    Returns [(feature_subset, tree)] where each tree's feature indices
-    are LOCAL to its subset (cart_to_expr-compatible after remap by
-    forest_to_expr).
+    Returns the list of trees, each trained on its feature subset and
+    then remapped once to GLOBAL feature indices, so every tree scores
+    the full vector directly (cart_predict / cart_to_expr).
     """
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     n, d = X.shape
     m = max(1, int(np.sqrt(d)))
+
+    def remap(node: tuple, feats: list[int]) -> tuple:
+        if node[0] == "leaf":
+            return node
+        _, f, thr, lo, hi = node
+        return ("split", feats[f], thr, remap(lo, feats), remap(hi, feats))
+
     forest = []
     for t in range(n_trees):
         rows = np.sort(_lcg_indices(n, n, seed + 2 * t + 1))
@@ -423,34 +447,22 @@ def train_random_forest(
             if f not in feats:
                 feats.append(f)
         feats.sort()
-        forest.append((feats, train_cart(X[rows][:, feats], y[rows], max_depth)))
+        tree = train_cart(X[rows][:, feats], y[rows], max_depth)
+        forest.append(remap(tree, feats))
     return forest
 
 
 def forest_predict(forest: list, X: np.ndarray) -> np.ndarray:
     """Mean of per-tree probabilities (predict_proba averaging)."""
-    X = np.asarray(X, dtype=np.float64)
-    acc = np.zeros(len(X), dtype=np.float64)
-    for feats, tree in forest:
-        acc += cart_predict(tree, X[:, feats])
+    acc = sum(cart_predict(tree, X) for tree in forest)
     return np.round(acc / len(forest), 6)
 
 
 def forest_to_expr(forest: list, vec_col: str) -> F.Column:
-    """Compile the forest to (Σ per-tree CASE trees) / n — the
-    rfc_score_expr ensemble pattern with learned splits."""
-
-    def remap(node: tuple, feats: list[int]) -> tuple:
-        if node[0] == "leaf":
-            return node
-        _, f, thr, lo, hi = node
-        return ("split", feats[f], thr, remap(lo, feats), remap(hi, feats))
-
-    total = None
-    for feats, tree in forest:
-        e = cart_to_expr(remap(tree, feats), vec_col)
-        total = e if total is None else total + e
-    return F.round(total / F.lit(float(len(forest))), 6)
+    """Compile the forest to (Σ per-tree CASE trees) / n, rounded to 6
+    places."""
+    trees = [cart_to_expr(tree, vec_col) for tree in forest]
+    return F.round(sum(trees[1:], trees[0]) / F.lit(float(len(forest))), 6)
 
 
 def train_dt_and_score(
@@ -467,29 +479,14 @@ def train_dt_and_score(
     through compiled CASE WHEN expressions — zero Python scoring.
     Adds ``dt_score``/``dt_pred`` and ``rfc_score``/``rfc_pred``.
     Tie rule: predict_proba argmax takes class 0 at exactly 0.5, so
-    pred = score > 0.5.
-
-    The training slice is ordered on ``doc_id`` before ``limit``: the
-    forest's LCG bootstrap indexes rows by collected POSITION, so an
-    unordered collect (partition-order, AQE-dependent) would train a
-    different forest per run — a shuffled split would flap the
-    rows-only driver gate."""
-    train = (
-        vectors.select("doc_id", vec_col, label_col)
-        .orderBy("doc_id")
-        .limit(max_train_rows)
-        .toPandas()
-    )
-    X = np.vstack(train[vec_col].to_numpy())
-    y = train[label_col].to_numpy()
+    pred = score > 0.5."""
+    X, y = _training_slice(vectors, label_col, vec_col, max_train_rows)
     tree = train_cart(X, y, max_depth=max_depth)
     forest = train_random_forest(X, y, n_trees=n_trees)
-    dt = cart_to_expr(tree, vec_col)
-    rfc = forest_to_expr(forest, vec_col)
     return (
-        vectors.withColumn("dt_score", dt)
+        vectors.withColumn("dt_score", cart_to_expr(tree, vec_col))
         .withColumn("dt_pred", (F.col("dt_score") > 0.5).cast("int"))
-        .withColumn("rfc_score", rfc)
+        .withColumn("rfc_score", forest_to_expr(forest, vec_col))
         .withColumn("rfc_pred", (F.col("rfc_score") > 0.5).cast("int"))
     )
 
@@ -579,17 +576,8 @@ def train_zoo_and_score(
     and score the corpus through the existing JVM kernels — zero Python
     in the scoring path (gnb log-odds via gnb_score_expr, both margins
     via svm_margin_expr). Adds gnb_logodds/gnb_pred, ptn_margin/
-    ptn_pred, svm_margin/svm_pred. The training slice is ordered on
-    doc_id before limit (the same determinism rule as
-    train_and_score/train_dt_and_score)."""
-    train = (
-        vectors.select("doc_id", vec_col, label_col)
-        .orderBy("doc_id")
-        .limit(max_train_rows)
-        .toPandas()
-    )
-    X = np.vstack(train[vec_col].to_numpy())
-    y = train[label_col].to_numpy()
+    ptn_pred, svm_margin/svm_pred."""
+    X, y = _training_slice(vectors, label_col, vec_col, max_train_rows)
     mu0, var0, mu1, var1, p1 = train_gnb(X, y)
     # degenerate priors (single-class slice) have no log-odds; the
     # reference would raise inside GaussianNB the same way
@@ -602,74 +590,48 @@ def train_zoo_and_score(
     a, bq, c0 = gnb_coefficients(mu0, var0, mu1, var1, p1)
     w_p, b_p = train_perceptron(X, y)
     w_s, b_s = train_linear_svm(X, y)
-    out = (
-        vectors.withColumn(
-            "gnb_logodds", F.round(gnb_score_expr(vec_col, a, bq, c0), 6)
-        )
-        .withColumn("gnb_pred", (F.col("gnb_logodds") > 0).cast("int"))
-        .withColumn(
-            "ptn_margin",
-            F.round(svm_margin_expr(vec_col, w_p.tolist(), b_p), 6),
-        )
-        .withColumn("ptn_pred", (F.col("ptn_margin") > 0).cast("int"))
-        .withColumn(
-            "svm_margin",
-            F.round(svm_margin_expr(vec_col, w_s.tolist(), b_s), 6),
-        )
-        .withColumn("svm_pred", (F.col("svm_margin") > 0).cast("int"))
-    )
+    out = vectors
+    for score_col, pred_col, score in (
+        ("gnb_logodds", "gnb_pred", gnb_score_expr(vec_col, a, bq, c0)),
+        ("ptn_margin", "ptn_pred", svm_margin_expr(vec_col, w_p.tolist(), b_p)),
+        ("svm_margin", "svm_pred", svm_margin_expr(vec_col, w_s.tolist(), b_s)),
+    ):
+        out = out.withColumn(score_col, F.round(score, 6))
+        out = out.withColumn(pred_col, (F.col(score_col) > 0).cast("int"))
     return out
 
 
 # ---------------------------------------------------------------------------
-# Fixed-weight kernels (deterministic, DuckDB-oracle-checkable)
+# JVM scoring kernels and their fixed, DuckDB-oracle-checkable params.
+# Loglizer's model zoo (loglizer.py:450-461 trains DT, LR, SVM, RFC and
+# :431-441 GNB/PTN/SGDC_*) scores through two forms: a weighted sum over
+# the ECM vector (every linear member, the logistic score, GNB's
+# quadratic log-odds) or a tree / tree ensemble (cart_to_expr above) —
+# no Python in the scoring path.
 # ---------------------------------------------------------------------------
+
+def _weighted_sum(
+    vec_col: str, coefs: list, bias: float, term=lambda x, c: x * c
+) -> F.Column:
+    """``bias + Σ_i term(x_i, coefs[i])`` over an array column: one
+    zip_with for the per-slot terms, one aggregate that starts at the
+    bias and adds them in slot order."""
+    return F.aggregate(
+        F.zip_with(
+            F.col(vec_col).cast("array<double>"),
+            F.array(*[F.lit(c) for c in coefs]),
+            term,
+        ),
+        F.lit(float(bias)),
+        lambda acc, v: acc + v,
+    )
+
 
 def fixed_weights(size: int) -> tuple[list[float], float]:
     """Deterministic LR weights for the oracle-checked scoring query."""
     w = [round(0.3 - 0.05 * i, 6) for i in range(size)]
     return w, -0.5
 
-
-def logreg_score_expr(vec_col: str, w: list[float], b: float) -> F.Column:
-    """JVM-side sigmoid(w·x + b) over an array column — the pure-SQL
-    expression of the same kernel (used for oracle parity and as the
-    no-Python fast path)."""
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.array(*[F.lit(x) for x in w]),
-            lambda v, wi: v * wi,
-        ),
-        F.lit(float(b)),
-        lambda acc, v: acc + v,
-    )
-    return 1 / (1 + F.exp(-dot))
-
-
-def dt_score_expr(vec_col: str) -> F.Column:
-    """A small fixed decision tree over count-vector slots compiled to
-    CASE WHEN (the generated-predicate pattern used for the KB's
-    param-dependent rules, extensions/cm/knowledgebase.py:61-311).
-
-    node split order: x[6] (tls errors) → x[8] (file-missing) → x[0].
-    """
-    x = lambda i: F.element_at(F.col(vec_col), i + 1).cast("double")  # noqa: E731
-    return (
-        F.when(x(6) > 0, F.lit(0.95))
-        .when(x(8) > 2, F.lit(0.8))
-        .when(x(0) > 10, F.lit(0.2))
-        .otherwise(F.lit(0.05))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Loglizer model-zoo inference kernels (loglizer.py:450-461 trains DT,
-# LR, SVM, RFC and :431-441 GNB/PTN/SGDC_*; inference for every one of
-# them is either a linear decision function, a Gaussian-NB log-odds, or
-# a tree ensemble — each expressible as JVM column math over the ECM
-# vector, no Python in the scoring path).
-# ---------------------------------------------------------------------------
 
 def fixed_gnb_params(
     size: int,
@@ -713,19 +675,11 @@ def gnb_coefficients(
 def gnb_score_expr(
     vec_col: str, a: list[float], b: list[float], c0: float
 ) -> F.Column:
-    """Gaussian-NB log-odds over a dense count-vector column — pure JVM
-    zip_with/aggregate, zero Python (the GNB member of loglizer's zoo,
+    """Gaussian-NB log-odds ``c0 + Σ (x_i·a_i + x_i·x_i·b_i)`` over a
+    dense count-vector column (the GNB member of loglizer's zoo,
     loglizer.py:431-432)."""
-    x = F.col(vec_col).cast("array<double>")
-    lin = F.zip_with(x, F.array(*[F.lit(v) for v in a]), lambda xi, ai: xi * ai)
-    quad = F.zip_with(
-        x, F.array(*[F.lit(v) for v in b]), lambda xi, bi: xi * xi * bi
-    )
-    return F.aggregate(
-        F.zip_with(lin, quad, lambda l, q: l + q),
-        F.lit(float(c0)),
-        lambda acc, v: acc + v,
-    )
+    ab = [F.struct(F.lit(ai).alias("a"), F.lit(bi).alias("b")) for ai, bi in zip(a, b)]
+    return _weighted_sum(vec_col, ab, c0, lambda x, c: x * c["a"] + x * x * c["b"])
 
 
 def fixed_svm_weights(size: int) -> tuple[list[float], float]:
@@ -737,17 +691,23 @@ def fixed_svm_weights(size: int) -> tuple[list[float], float]:
 
 
 def svm_margin_expr(vec_col: str, w: list[float], b: float) -> F.Column:
-    """Linear decision margin w.x + b (no sigmoid): sign is the class."""
-    return F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.array(*[F.lit(x) for x in w]),
-            lambda v, wi: v * wi,
-        ),
-        F.lit(float(b)),
-        lambda acc, v: acc + v,
-    )
+    """Linear decision margin w.x + b (no sigmoid): sign is the class.
+    The logistic score is ``1 / (1 + exp(-margin))`` of the same sum."""
+    return _weighted_sum(vec_col, w, b)
 
+
+# A small fixed decision tree over count-vector slots in train_cart's
+# form (``x[f] <= thr`` routes left), the generated-predicate pattern of
+# the KB's param-dependent rules (extensions/cm/knowledgebase.py:61-311):
+# x[6] > 0 (tls errors) → 0.95, else x[8] > 2 (file-missing) → 0.8,
+# else x[0] > 10 → 0.2, else 0.05.
+DT_TREE = (
+    "split", 6, 0.0,
+    ("split", 8, 2.0,
+     ("split", 0, 10.0, ("leaf", 0.05), ("leaf", 0.2)),
+     ("leaf", 0.8)),
+    ("leaf", 0.95),
+)
 
 # Five fixed depth-2 trees over ECM slots: (slot_a, thr_a, slot_b,
 # thr_b, leaf_aa, leaf_ab, leaf_b) meaning
@@ -764,18 +724,9 @@ RFC_TREES: list[tuple[int, float, int, float, float, float, float]] = [
     (1, 0.0, 2, 0.0, 0.75, 0.5, 0.3),
 ]
 
-
-def rfc_score_expr(vec_col: str) -> F.Column:
-    """Random-forest inference (loglizer.py:460-461): the mean leaf
-    probability of RFC_TREES, each tree compiled to CASE WHEN — the
-    dt_score_expr pattern lifted to an ensemble. Zero Python."""
-    x = lambda i: F.element_at(F.col(vec_col), i + 1).cast("double")  # noqa: E731
-    votes = [
-        F.when(x(sa) > ta, F.when(x(sb) > tb, F.lit(laa)).otherwise(F.lit(lab)))
-        .otherwise(F.lit(lb))
-        for sa, ta, sb, tb, laa, lab, lb in RFC_TREES
-    ]
-    total = votes[0]
-    for v in votes[1:]:
-        total = total + v
-    return total / len(votes)
+# RFC_TREES in train_cart's form, scored by forest_to_expr (loglizer.py:
+# 460-461 random-forest inference: the mean leaf probability).
+RFC_FOREST = [
+    ("split", sa, ta, ("leaf", lb), ("split", sb, tb, ("leaf", lab), ("leaf", laa)))
+    for sa, ta, sb, tb, laa, lab, lb in RFC_TREES
+]

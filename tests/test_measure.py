@@ -1,6 +1,7 @@
 """loganalyzer_spark.measure: the timed window starts on an empty
 cache, materialize keeps every output column, and the median-vs-best-of
-policy (checked with a stubbed probe and clock, no Spark)."""
+policy (checked with a stubbed probe and clock, no Spark), and the
+host stamp every published run carries."""
 
 from __future__ import annotations
 
@@ -88,3 +89,14 @@ def test_timed_policy_best_of_when_every_round_degraded(stubbed):
     t, waits = stubbed([3.0, 2.5, 2.0, 6.0, 5.0, 4.0], [100.0] * 6)
     assert len(waits) == 1  # one retry round, no more
     assert len(t.walls) == 6 and not t.healthy and t.wall == 2.0
+
+
+def test_host_stamp_names_the_host():
+    import os
+
+    import pyspark
+
+    stamp = measure.host_stamp()
+    assert stamp.startswith(f"{os.cpu_count()} cpus, MemTotal ")
+    assert f"Spark {pyspark.__version__}" in stamp and "heap budget " in stamp
+    assert stamp.endswith(" UTC")

@@ -1264,6 +1264,12 @@ def test_kfold_validate(spark):
     # determinism: second run bit-identical
     again = {r["fold"]: r for r in kfold_validate(spark, vec, k=5).collect()}
     assert again == out
+    # fewer than two folds with both train and test rows: nothing to
+    # cross-validate (one document; k=1 puts every row in the test fold)
+    with pytest.raises(ValueError, match="two folds"):
+        kfold_validate(spark, vec.filter("doc_id = 0"), k=5)
+    with pytest.raises(ValueError, match="two folds"):
+        kfold_validate(spark, vec.filter("doc_id < 10"), k=1)
 
 
 def test_c4_clean(spark):
@@ -1325,41 +1331,58 @@ def test_c4_clean(spark):
 
 
 def test_model_zoo_kernels(spark):
-    """GNB log-odds, SVM margin and RFC ensemble must equal the numpy
-    reference math on hand vectors (the loglizer zoo inference forms)."""
+    """GNB log-odds, SVM margin, JVM logistic score, the fixed decision
+    tree and the RFC ensemble must equal the numpy reference math on
+    hand vectors (the loglizer zoo inference forms)."""
     import math
+
+    import numpy as np
 
     from loganalyzer_spark import scoring as SC
 
     from loganalyzer_spark import datagen
 
     d = datagen.VOCAB_SIZE  # RFC_TREES indexes slots up to 13
+    # docs 3 and 4 reach the fixed tree's x[8] > 2 and x[0] > 10 leaves
     vecs = [
         (0, [0.0] * d),
         (1, [float((3 * i + 1) % 5) for i in range(d)]),
         (2, [float((7 * i) % 4) for i in range(d)]),
+        (3, [3.0 if i == 8 else 0.0 for i in range(d)]),
+        (4, [11.0 if i == 0 else 0.0 for i in range(d)]),
     ]
     df = spark.createDataFrame(vecs, ["doc_id", "vec"])
 
     mu0, var0, mu1, var1, p1 = SC.fixed_gnb_params(d)
     a, b, c0 = SC.gnb_coefficients(mu0, var0, mu1, var1, p1)
     w, bias = SC.fixed_svm_weights(d)
+    lr_w, lr_b = SC.fixed_weights(d)
 
     from pyspark.sql import functions as F
 
+    # the logistic score exactly as logreg_score_jvm builds it
+    lr = 1 / (1 + F.exp(-SC.svm_margin_expr("vec", lr_w, lr_b)))
     out = {
         r["doc_id"]: r
         for r in df.select(
             "doc_id",
             F.round(SC.gnb_score_expr("vec", a, b, c0), 6).alias("gnb"),
             F.round(SC.svm_margin_expr("vec", w, bias), 6).alias("svm"),
-            F.round(SC.rfc_score_expr("vec"), 6).alias("rfc"),
+            F.round(lr, 6).alias("lr"),
+            SC.cart_to_expr(SC.DT_TREE, "vec").alias("dt"),
+            F.round(SC.forest_to_expr(SC.RFC_FOREST, "vec"), 6).alias("rfc"),
         ).collect()
     }
 
+    dts = set()
     for doc_id, x in vecs:
         gnb = c0 + sum(ai * xi + bi * xi * xi for ai, bi, xi in zip(a, b, x))
         svm = bias + sum(wi * xi for wi, xi in zip(w, x))
+        lr_np = 1.0 / (1.0 + np.exp(-(np.array(x) @ np.array(lr_w) + lr_b)))
+        dt = (
+            0.95 if x[6] > 0 else 0.8 if x[8] > 2 else 0.2 if x[0] > 10 else 0.05
+        )
+        dts.add(dt)
         leaves = [
             (laa if x[sb] > tb else lab) if x[sa] > ta else lb
             for sa, ta, sb, tb, laa, lab, lb in SC.RFC_TREES
@@ -1367,7 +1390,10 @@ def test_model_zoo_kernels(spark):
         rfc = sum(leaves) / len(leaves)
         assert math.isclose(out[doc_id]["gnb"], round(gnb, 6), abs_tol=1e-6)
         assert math.isclose(out[doc_id]["svm"], round(svm, 6), abs_tol=1e-6)
+        assert math.isclose(out[doc_id]["lr"], round(lr_np, 6), abs_tol=1e-6)
+        assert out[doc_id]["dt"] == dt
         assert math.isclose(out[doc_id]["rfc"], round(rfc, 6), abs_tol=1e-6)
+    assert dts == {0.95, 0.8, 0.2, 0.05}  # every leaf of the tree fires
 
     # the zero vector scores exactly c0 / bias: sparse-oracle parity
     assert out[0]["gnb"] == round(c0, 6)
@@ -2178,14 +2204,28 @@ def test_margin_sgd_properties_hypothesis():
     check()
 
 
-def test_train_zoo_rejects_constant_features(spark):
-    """A training slice whose every feature is constant has no GNB
-    variance to smooth by: clear ValueError, not ZeroDivisionError."""
-    from loganalyzer_spark.scoring import train_zoo_and_score
+@pytest.mark.parametrize(
+    "trainer, rows, match",
+    [
+        # every feature constant: no GNB variance to smooth by
+        ("train_zoo_and_score", [(i, [1.0, 0.0, 2.0], i % 2) for i in range(6)],
+         "feature that varies"),
+        ("train_and_score", [], "empty training slice"),
+        ("train_dt_and_score", [], "empty training slice"),
+        ("train_zoo_and_score", [], "empty training slice"),
+        ("kfold_validate", [], "two folds"),
+    ],
+    ids=["train_zoo_and_score-constant", "train_and_score-empty",
+         "train_dt_and_score-empty", "train_zoo_and_score-empty",
+         "kfold_validate-empty"],
+)
+def test_trainers_reject_degenerate_input(spark, trainer, rows, match):
+    """A degenerate training input raises a ValueError that names the
+    problem, not a numpy or ZeroDivisionError from inside a trainer."""
+    from loganalyzer_spark import scoring as SC
 
     vectors = spark.createDataFrame(
-        [(i, [1.0, 0.0, 2.0], i % 2) for i in range(6)],
-        "doc_id long, vec array<double>, label int",
+        rows, "doc_id long, vec array<double>, label int"
     )
-    with pytest.raises(ValueError, match="feature that varies"):
-        train_zoo_and_score(spark, vectors)
+    with pytest.raises(ValueError, match=match):
+        getattr(SC, trainer)(spark, vectors)

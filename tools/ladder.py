@@ -27,7 +27,6 @@ import os
 import re
 import subprocess
 import sys
-import time
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -189,18 +188,6 @@ def best_of(mode: str, rung: int, cmd: list[str], reps: int) -> dict:
     }
 
 
-def host_stamp() -> str:
-    import pyspark
-
-    with open("/proc/meminfo") as f:
-        mem_gb = int(f.readline().split()[1]) / 2**20
-    sha = subprocess.run(["git", "describe", "--always", "--dirty"], capture_output=True,
-                         text=True, cwd=REPO).stdout.strip()
-    return (f"{os.cpu_count()} cpus, MemTotal {mem_gb:.1f} GB, "
-            f"heap budget {default_heap_mb()} MB, Spark {pyspark.__version__}, "
-            f"git {sha or '?'}, {time.strftime('%Y-%m-%d %H:%M UTC', time.gmtime())}")
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--mode", choices=["threads", "executors"], default="threads")
@@ -236,7 +223,7 @@ def main() -> None:
     with open(path, "w") as f:
         f.write(f"""# Ladder: `{a.target}`, {a.mode} mode, n = {a.n}
 
-Host: {host_stamp()}.
+Host: {measure.host_stamp()}.
 
 Each row is the best of {a.reps} spark-submit runs of `jobs/run.py {a.target}`
 (one-sided host noise). Inside each run `measure.timed` publishes the
